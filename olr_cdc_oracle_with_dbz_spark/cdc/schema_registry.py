@@ -20,8 +20,7 @@ last-writer-wins). On a cluster this lives beside the table on shared
 storage, so all file bookkeeping routes through the same filesystem seam
 (``fs.py``) as the sink: ``SchemaRegistry(root, subject,
 fs=HadoopFS(spark))`` versions schemas on hdfs:// / s3a:// exactly as
-locally. (Pre-r13 registries left a ``_CURRENT`` pointer behind; it is
-simply ignored — highest-N resolves identically.)
+locally.
 
 TORN-RECORD posture (r19, the r18 review pass's one soft spot): on
 stores where ``create_exclusive`` degrades to a client-enforced fence, a
@@ -32,11 +31,10 @@ dropping the appended columns of an evolution, so parse failure cannot
 be the detector here. Records are therefore self-verifying: every
 registration publishes ``#sha256:<digest>`` on line one and the DDL
 below it (:func:`_seal`), and every read verifies (:func:`_unseal`).
-Plain pre-r19 records (DDL never starts with ``#``) read as-is — they
-were published under LocalFS's hardlink contract, which never publishes
-torn content. A detected torn record behaves like the commit log's torn
-head: reads RAISE loudly (no silent fallback to the pre-evolution
-schema, which would null evolved columns out of every event) while
+A record without a valid header reads as torn. A torn record behaves
+like the commit log's torn head: reads RAISE loudly (no silent fallback
+to the pre-evolution schema, which would null evolved columns out of
+every event) while
 :meth:`SchemaRegistry.register` skips it for idempotency matching and
 supersedes it at the next number — so the torn writer's own restart
 re-registers its schema and heals the registry without manual recovery.
@@ -48,10 +46,9 @@ import hashlib
 import os
 import re
 
-#: Line-one header of a sealed (self-verifying) record. A record starting
-#: with ``#`` MUST carry a valid matching header — a torn prefix of a
-#: sealed record ("#sha2", or header + partial body) can never pass, and a
-#: legacy plain-DDL record can never start with ``#``.
+#: Line-one header of a sealed (self-verifying) record. Every record MUST
+#: carry a valid matching header — a torn prefix of a sealed record
+#: ("#sha2", or header + partial body) can never pass.
 _SEAL = "#sha256:"
 
 
@@ -61,16 +58,10 @@ def _seal(ddl: str) -> str:
 
 
 def _unseal(raw: str) -> str | None:
-    """DDL payload of a record, or None for a TORN sealed record.
-
-    Legacy plain records (no ``#`` prefix) pass through verbatim: they
-    predate sealing and were published complete-or-absent. Any record
-    claiming the sealed format is verified: a missing newline, malformed
-    header, or digest mismatch — every possible truncation of a sealed
-    record — reads as torn.
+    """DDL payload of a record, or None for a TORN record: a missing
+    newline, malformed header, or digest mismatch — every possible
+    truncation of a sealed record — reads as torn.
     """
-    if not raw.startswith("#"):
-        return raw
     head, sep, body = raw.partition("\n")
     if not sep or not head.startswith(_SEAL):
         return None

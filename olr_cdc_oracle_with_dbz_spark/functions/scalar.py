@@ -393,6 +393,15 @@ def q43c_higher_order(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).cast("decimal(30,9)"),
         lambda acc, x: (acc + dec(F.abs(x.cast("double")))).cast("decimal(30,9)"),
     )
+
+    def round6_signed(acc):
+        # Spark rounds a double through BigDecimal, so a small negative sum
+        # that rounds to zero comes back +0.0 where DuckDB's ROUND keeps
+        # -0.0. -abs(r) equals r for every negative input except that zero.
+        d = acc.cast("double")
+        r = F.round(d, 6)
+        return F.when(d < 0, -F.abs(r)).otherwise(r)
+
     zip_dot = F.aggregate(
         F.zip_with(
             F.slice(emb, 1, 8),
@@ -401,6 +410,7 @@ def q43c_higher_order(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.lit(0).cast("decimal(30,9)"),
         lambda acc, x: (acc + x).cast("decimal(30,9)"),
+        round6_signed,
     )
     # range-partition BEFORE the lambdas: interpreted HOF evaluation is
     # the dominant cost, and a sampled range sort above it runs it twice
@@ -411,7 +421,7 @@ def q43c_higher_order(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             F.round(l1.cast("double"), 6).alias("l1_head"),
             F.size(F.filter(emb, lambda x: x.cast("double") > 0)).alias("n_pos"),
-            F.round(zip_dot.cast("double"), 6).alias("zip_dot"),
+            zip_dot.alias("zip_dot"),
         )
         .sortWithinPartitions("vec_id")
     )

@@ -1000,6 +1000,14 @@ def l2e_dup_clusters(
     )
 
 
+def _release_local_checkpoint(df: DataFrame) -> None:
+    """Free a ``localCheckpoint()`` frame's stored blocks.
+    ``DataFrame.unpersist`` does not: it only drops CacheManager entries,
+    and a local checkpoint is a LogicalRDD leaf over a persisted RDD that
+    the CacheManager never saw."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
 def _propagate_min_labels(
     raw: DataFrame,
     n_edges: int,
@@ -1041,7 +1049,7 @@ def _propagate_min_labels(
         .localCheckpoint()
     )
     labels = connected.select("doc_id", F.col("doc_id").alias("lab"))
-    prev_sum, rounds = None, 0
+    prev_sum, rounds, prev_cut = None, 0, None
     while True:
         neighbor_min = (
             edges.join(labels, edges.s == labels.doc_id)
@@ -1081,7 +1089,12 @@ def _propagate_min_labels(
         # labels only ever decrease, so the label sum is a strictly
         # monotone convergence metric.
         new_sum = new_labels.agg(F.sum("lab")).collect()[0][0]
-        labels = new_labels
+        # the previous round's cut is unreferenced from here on (the new
+        # cut holds its own materialized copy); release its blocks now
+        # instead of leaving O(log d) label copies to the ContextCleaner
+        if prev_cut is not None:
+            _release_local_checkpoint(prev_cut)
+        labels = prev_cut = new_labels
         if prev_sum is not None and new_sum == prev_sum:
             break
         prev_sum = new_sum

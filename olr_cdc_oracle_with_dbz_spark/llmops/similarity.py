@@ -387,7 +387,9 @@ def _make_fixedlist_matrix():
     (n, dim) numpy view: when every list has the same length, the list
     array's flat values buffer IS the row-major matrix — no per-row
     np.asarray + vstack (which profiled as the dominant cost of the
-    assignment UDF). Falls back to vstack for ragged/null lists."""
+    assignment UDF). Falls back to vstack for ragged/null lists and for
+    every layout other than ``list`` (int32 offsets): ``large_list`` has
+    int64 offsets and ``fixed_size_list`` has no offsets buffer."""
 
     def fixedlist_matrix(arr):
         import numpy as np
@@ -396,8 +398,11 @@ def _make_fixedlist_matrix():
         if isinstance(arr, pa.ChunkedArray):
             arr = arr.combine_chunks()
         n = len(arr)
-        vt = arr.type.value_type
-        np_vt = {pa.float32(): np.float32, pa.float64(): np.float64}.get(vt)
+        np_vt = None
+        if pa.types.is_list(arr.type):
+            np_vt = {pa.float32(): np.float32, pa.float64(): np.float64}.get(
+                arr.type.value_type
+            )
         if np_vt is not None and arr.null_count == 0 and n:
             offs = np.frombuffer(
                 arr.buffers()[1], np.int32, count=arr.offset + n + 1

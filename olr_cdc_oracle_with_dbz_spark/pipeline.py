@@ -31,15 +31,27 @@ Config shape (every key maps to a reference connector setting, cited):
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from collections.abc import Callable
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from olr_cdc_oracle_with_dbz_spark.cdc.envelope import PK
+from olr_cdc_oracle_with_dbz_spark.cdc.envelope import (
+    PK,
+    parse_envelope,
+    quarantine_malformed,
+    source_filter,
+)
 from olr_cdc_oracle_with_dbz_spark.cdc.fixtures import ENVELOPE_SCHEMA
-from olr_cdc_oracle_with_dbz_spark.streaming.ingest import read_cdc_stream
+from olr_cdc_oracle_with_dbz_spark.streaming.ingest import (
+    read_cdc_stream,
+    read_text_stream,
+)
 from olr_cdc_oracle_with_dbz_spark.streaming.materialize import (
     ParquetUpsertTable,
-    materialize_stream,
+    run_to_completion,
+    start_sink,
 )
 
 
@@ -58,6 +70,48 @@ def _sink_fs(spark: SparkSession, sink: dict):
 
         return HadoopFS(spark)
     raise ValueError(f"unsupported sink fs {choice!r} (use 'local' or 'hadoop')")
+
+
+def _drive(
+    stream: DataFrame,
+    route: Callable[[DataFrame, int], list[DataFrame]],
+    tables: list[ParquetUpsertTable],
+    config: dict,
+    trigger_once: bool,
+    timeout_sec: float | None,
+) -> StreamingQuery:
+    """The one sink driver behind every pipeline shape.
+
+    ``route(batch, batch_id)`` is the shape's per-batch pre-step; it
+    returns one envelope batch per table, in ``tables`` order, and each
+    goes through that table's :meth:`ParquetUpsertTable.foreach_batch`
+    (the only merge-or-spool rule). The query starts through
+    :func:`start_sink`, which also stamps every table with the
+    checkpoint-derived replay identity (R15).
+
+    A bounded run whose sink coalesces micro-batches (``min_batch_events
+    > 0``) is awaited here so every table's sub-threshold spool tail is
+    published before returning (ADVICE r10): otherwise those rows sit
+    durably in ``_spool/`` while the checkpoint commits, and readers see
+    stale state. ``timeout_sec`` bounds the await (ADVICE r11); on expiry
+    :func:`run_to_completion` stops the query before flushing. Continuous
+    streams call ``run_to_completion`` (or ``flush_spool``) at shutdown
+    themselves.
+    """
+    # sink batch-sizing knob (CDC_STEADY_r09): micro-batches below this
+    # event count are spooled and merged together, amortizing the
+    # per-commit floor. 0 = merge every micro-batch (default).
+    min_batch_events = config["sink"].get("min_batch_events", 0)
+    sinks = [table.foreach_batch(min_batch_events) for table in tables]
+
+    def fn(batch: DataFrame, batch_id: int) -> None:
+        for sink, part in zip(sinks, route(batch, batch_id), strict=True):
+            sink(part, batch_id)
+
+    query = start_sink(stream, fn, config["checkpoint"], tables, trigger_once)
+    if trigger_once and min_batch_events > 0:
+        run_to_completion(query, *tables, timeout_sec=timeout_sec)
+    return query
 
 
 def run_pipeline(
@@ -104,34 +158,16 @@ def run_pipeline(
             reg.register(ENVELOPE_SCHEMA)
         envelope_ddl = reg.current()
 
-    table = ParquetUpsertTable(
-        spark,
-        sink["table_dir"],
-        key=sink.get("pk", PK),
-        fs=fs,
-        # replay identity (r15 ADVICE): a fresh checkpoint reprocessing
-        # into this table dir raises on a batch-id label collision
-        # instead of silently no-op'ing the colliding batch
-        stream_id=f"ckpt:{config['checkpoint'].rstrip('/')}",
-    )
+    table = ParquetUpsertTable(spark, sink["table_dir"], key=sink.get("pk", PK), fs=fs)
 
     if "quarantine" in config:
         # permissive-ingest form: parse inside foreachBatch so undecodable
         # lines divert to the dead-letter dir instead of failing the stream
         # (unknown-type passthrough posture, OpenLogReplicator.json:25)
-        from pyspark.sql import functions as F
-
-        from olr_cdc_oracle_with_dbz_spark.cdc.envelope import (
-            quarantine_malformed,
-            unwrap,
-        )
-
         qdir = config["quarantine"]
-        raw = spark.readStream.format("text").load(src["path"])
+        stream = read_text_stream(spark, src["path"], src.get("max_files_per_trigger"))
 
-        q_min_batch = sink.get("min_batch_events", 0)
-
-        def fn(batch, batch_id: int) -> None:
+        def route(batch: DataFrame, batch_id: int) -> list[DataFrame]:
             good, bad = quarantine_malformed(batch, schema=envelope_ddl)
             # per-batch overwrite, keyed by the batch id (r19 review pass):
             # a foreachBatch REPLAY after a crash between this write and
@@ -141,80 +177,33 @@ def run_pipeline(
             # `spark.read.parquet(qdir)` as before; partition discovery
             # surfaces the batch id as a column.
             bad.write.mode("overwrite").parquet(f"{qdir}/batch={batch_id}")
-            good = good.filter(
-                (F.col("_schema") == schema_name) & (F.col("_table") == table_name)
-            )
-            unwrapped = unwrap(good)
-            if q_min_batch <= 0:
-                table.merge_batch(unwrapped, batch_id)
-                return
-            table.spool_batch(unwrapped, batch_id)
-            if table.spool_events() >= q_min_batch:
-                table.flush_spool(batch_id)
+            return [source_filter(good, schema_name, table_name)]
 
-        writer = (
-            raw.writeStream.outputMode("update")
-            .foreachBatch(fn)
-            .option("checkpointLocation", config["checkpoint"])
-        )
-        if trigger_once:
-            writer = writer.trigger(availableNow=True)
-        query = writer.start()
-        if trigger_once and q_min_batch > 0:
-            # bounded run: publish the sub-threshold tail (ADVICE r10);
-            # bounded await so a wedged query can't hang us (ADVICE r11),
-            # stop-before-flush on expiry so an active stream can never
-            # race the spool cleanup (run_to_completion owns the logic)
-            from olr_cdc_oracle_with_dbz_spark.streaming.materialize import (
-                run_to_completion,
-            )
-
-            run_to_completion(query, table, timeout_sec=timeout_sec)
-        return query, table
-
-    if "kafka" in src:
-        from olr_cdc_oracle_with_dbz_spark.sources.kafka import read_kafka_cdc
-
-        env = read_kafka_cdc(
-            spark,
-            src["kafka"]["bootstrap"],
-            src["kafka"]["topic"],
-            schema_name=schema_name,
-            table=table_name,
-        )
     else:
-        env = read_cdc_stream(
-            spark,
-            src["path"],
-            schema_name=schema_name,
-            table=table_name,
-            max_files_per_trigger=src.get("max_files_per_trigger"),
-            envelope_schema=envelope_ddl,
-        )
+        if "kafka" in src:
+            from olr_cdc_oracle_with_dbz_spark.sources.kafka import read_kafka_cdc
 
-    min_batch_events = sink.get("min_batch_events", 0)
-    query = materialize_stream(
-        env,
-        table,
-        config["checkpoint"],
-        trigger_once=trigger_once,
-        # sink batch-sizing knob (CDC_STEADY_r09): micro-batches below this
-        # event count are spooled and merged together, amortizing the
-        # per-commit floor. 0 = merge every micro-batch (default).
-        min_batch_events=min_batch_events,
-    )
-    if trigger_once and min_batch_events > 0:
-        # A bounded run must publish its sub-threshold tail (ADVICE r10):
-        # otherwise rows below the threshold sit durably in _spool/ while
-        # the checkpoint commits, and readers see stale state. trigger_once
-        # queries are finite, so awaiting here keeps run_pipeline's
-        # "returns a queryable table" contract honest; continuous streams
-        # call run_to_completion (or flush_spool) at shutdown themselves.
-        from olr_cdc_oracle_with_dbz_spark.streaming.materialize import (
-            run_to_completion,
-        )
+            stream = read_kafka_cdc(
+                spark,
+                src["kafka"]["bootstrap"],
+                src["kafka"]["topic"],
+                schema_name=schema_name,
+                table=table_name,
+            )
+        else:
+            stream = read_cdc_stream(
+                spark,
+                src["path"],
+                schema_name=schema_name,
+                table=table_name,
+                max_files_per_trigger=src.get("max_files_per_trigger"),
+                envelope_schema=envelope_ddl,
+            )
 
-        run_to_completion(query, table, timeout_sec=timeout_sec)
+        def route(batch: DataFrame, _batch_id: int) -> list[DataFrame]:
+            return [batch]
+
+    query = _drive(stream, route, [table], config, trigger_once, timeout_sec)
     return query, table
 
 
@@ -228,76 +217,35 @@ def run_fanout_pipeline(
 
     The reference's OLR filter is an ARRAY of tables sharing one capture
     stream (/root/reference/scripts/OpenLogReplicator.json:32-39); here
-    the equivalent is a single file/Kafka source whose micro-batches are
-    routed by ``source.table`` inside ``foreachBatch`` — one offset log
-    covers every sink atomically, so a restart can never leave tables at
+    the equivalent is a single file source whose micro-batches are routed
+    by ``source.table`` inside ``foreachBatch`` — one offset log covers
+    every sink atomically, so a restart can never leave tables at
     different stream positions (the cross-table consistency the
-    reference gets from its single connector).
+    reference gets from its single connector). The shared checkpoint
+    also gives every per-table sink the same replay identity.
 
     Config: like :func:`run_pipeline` but ``filter.tables`` is a list and
-    ``sink.root_dir`` holds one subdirectory per table.
+    ``sink.root_dir`` holds one subdirectory per table. The per-table
+    spool threshold (``sink.min_batch_events``) matters most here:
+    routing splits every micro-batch N ways, so per-table batches are 1/N
+    the size and hit the per-commit floor N times as often without
+    coalescing.
     """
-    from olr_cdc_oracle_with_dbz_spark.cdc.envelope import parse_envelope
-
     src = config["source"]
-    flt = config.get("filter", {})
-    schema_name = flt.get("schema", "OLR_DB")
-    tables: list[str] = flt["tables"]
-    root = config["sink"]["root_dir"]
-    key = config["sink"].get("pk", PK)
-
-    from pyspark.sql import functions as F
-
-    raw = spark.readStream.format("text").load(src["path"])
+    schema_name = config.get("filter", {}).get("schema", "OLR_DB")
+    sink = config["sink"]
+    fs = _sink_fs(spark, sink)
+    sinks = {
+        t: ParquetUpsertTable(
+            spark, f"{sink['root_dir']}/{t}", key=sink.get("pk", PK), fs=fs
+        )
+        for t in config["filter"]["tables"]
+    }
+    raw = read_text_stream(spark, src["path"], src.get("max_files_per_trigger"))
     env = parse_envelope(raw, "value").filter(F.col("_schema") == schema_name)
 
-    fs = _sink_fs(spark, config["sink"])
-    sinks = {
-        # one shared checkpoint drives every per-table sink, so they share
-        # its replay identity (r15 ADVICE — see run_pipeline)
-        t: ParquetUpsertTable(
-            spark,
-            f"{root}/{t}",
-            key=key,
-            fs=fs,
-            stream_id=f"ckpt:{config['checkpoint'].rstrip('/')}",
-        )
-        for t in tables
-    }
-    # Per-table spool threshold (same sink knob as run_pipeline). Fanout is
-    # where it matters most: routing splits every micro-batch N ways, so
-    # per-table batches are 1/N the size and hit the per-commit floor N
-    # times as often without coalescing.
-    min_batch_events = config["sink"].get("min_batch_events", 0)
+    def route(batch: DataFrame, _batch_id: int) -> list[DataFrame]:
+        return [batch.filter(F.col("_table") == t) for t in sinks]
 
-    def route(batch, batch_id: int) -> None:
-        from olr_cdc_oracle_with_dbz_spark.cdc.envelope import unwrap
-
-        for t, table in sinks.items():
-            part = batch.filter(F.col("_table") == t)
-            unwrapped = unwrap(part)
-            if min_batch_events <= 0:
-                table.merge_batch(unwrapped, batch_id)
-                continue
-            table.spool_batch(unwrapped, batch_id)
-            if table.spool_events() >= min_batch_events:
-                table.flush_spool(batch_id)
-
-    writer = (
-        env.writeStream.outputMode("update")
-        .foreachBatch(route)
-        .option("checkpointLocation", config["checkpoint"])
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    query = writer.start()
-    if trigger_once and min_batch_events > 0:
-        # bounded run: publish every table's sub-threshold tail (same
-        # contract as run_pipeline — ADVICE r10); bounded await with
-        # stop-before-flush on expiry (ADVICE r11 + flush-race fix)
-        from olr_cdc_oracle_with_dbz_spark.streaming.materialize import (
-            run_all_to_completion,
-        )
-
-        run_all_to_completion(query, sinks.values(), timeout_sec=timeout_sec)
+    query = _drive(env, route, list(sinks.values()), config, trigger_once, timeout_sec)
     return query, sinks

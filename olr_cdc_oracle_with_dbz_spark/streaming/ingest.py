@@ -21,6 +21,17 @@ from pyspark.sql import DataFrame, SparkSession
 from olr_cdc_oracle_with_dbz_spark.cdc.envelope import parse_envelope, source_filter
 
 
+def read_text_stream(
+    spark: SparkSession, source_dir: str, max_files_per_trigger: int | None = None
+) -> DataFrame:
+    """Raw JSON-lines stream (one ``value`` string per line) from a watched
+    dir. ``max_files_per_trigger`` bounds each micro-batch (R19 analogue)."""
+    reader = spark.readStream.format("text")
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.load(source_dir)
+
+
 def read_cdc_stream(
     spark: SparkSession,
     source_dir: str,
@@ -34,10 +45,7 @@ def read_cdc_stream(
     ``envelope_schema`` pins decode to a registered schema version (R16);
     defaults to the built-in envelope DDL.
     """
-    reader = spark.readStream.format("text")
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    raw = reader.load(source_dir)
+    raw = read_text_stream(spark, source_dir, max_files_per_trigger)
     parsed = parse_envelope(
         raw, "value", **({"schema": envelope_schema} if envelope_schema else {})
     )

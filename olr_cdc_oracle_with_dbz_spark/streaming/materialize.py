@@ -34,8 +34,6 @@ check-then-swap near-miss window is gone. The log is BOUNDED: every
 ``retain_commits``-th commit auto-vacuums old records (r14), so a
 months-running stream neither grows ``_commits/`` without limit nor
 pays an O(all-commits-ever) LIST per merge.
-(Pre-r13 tables with the old ``_CURRENT`` pointer + ``*.manifest.json``
-layout are read as commit 0 and migrate on their next commit.)
 
 A micro-batch MERGE rewrites ONLY the buckets its keys hash into; untouched
 buckets stay referenced at their old version paths. Per-batch write cost is
@@ -66,6 +64,7 @@ import json
 import os
 import re
 import warnings
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -170,7 +169,6 @@ _IDENTITY_CAVEAT = (
 )
 
 
-_CURRENT = "_CURRENT"  # legacy (pre-r13) pointer file, read-only migration
 _COMMITS = "_commits"  # append-only commit log directory
 _FLOOR_EXT = ".floor"  # vacated-slot fence marker files (r15, ADVICE r14)
 _PB = "pb"  # bucket partition column
@@ -267,7 +265,7 @@ class ParquetUpsertTable:
         identity, a label collision from a DIFFERENT stream raises
         instead. Use the Structured Streaming ``query.id`` (stable
         across restarts from the same checkpoint) or the checkpoint
-        path; :func:`materialize_stream` auto-derives the latter when
+        path; :func:`start_sink` auto-derives the latter when
         the handle has none. Same posture as Delta's ``txnAppId``
         idempotent-write key. None preserves the label-only check (and
         records with no stored id — pre-r16 tables — never raise).
@@ -428,24 +426,10 @@ class ParquetUpsertTable:
         unknown. That's the conservative posture Delta's log takes with
         zombie commit files; recovery is deleting the torn record.
         """
-        seqs = self._commit_seqs()
-        for seq in reversed(seqs):
+        for seq in reversed(self._commit_seqs()):
             m = self._record(seq)
             if m is not None:
                 return seq, m
-        # legacy (pre-r13) pointer layout: adopt as commit 0; the next
-        # commit writes record 1 and the log supersedes the pointer
-        ptr = os.path.join(self.table_dir, _CURRENT)
-        if not seqs and self.fs.exists(ptr):
-            v = self.fs.read_text(ptr).strip()
-            if v:
-                m = json.loads(
-                    self.fs.read_text(
-                        os.path.join(self.table_dir, f"{v}.manifest.json")
-                    )
-                )
-                m.setdefault("version", v)
-                return 0, m
         return 0, None
 
     def current_version(self) -> str | None:
@@ -753,10 +737,6 @@ class ParquetUpsertTable:
             r = self._record(s)
             if r is not None:
                 seen.setdefault(r["version"], None)
-        if not seen:
-            _seq, m = self._head()  # legacy-pointer table
-            if m is not None:
-                return [m["version"]]
         return list(seen)
 
     def vacuum(self, keep: int = 2) -> list[str]:
@@ -805,7 +785,7 @@ class ParquetUpsertTable:
 
         seqs = self._commit_seqs()
         if not seqs:
-            return []  # empty or legacy-pointer table: nothing to vacuum
+            return []  # empty table: nothing to vacuum
         head_seq, _head_m = self._head()
         retained = set(seqs[-keep:]) if keep > 0 else set(seqs[-1:])
         grace_cutoff = time.time() - self.vacuum_grace_sec
@@ -850,12 +830,6 @@ class ParquetUpsertTable:
                 referenced.add(rel.split("/", 1)[0])
         for d in sorted(dropped_dirs - referenced):
             self.fs.delete(os.path.join(self.table_dir, d))
-        for d in self.fs.list_names(self.table_dir):
-            if d == _CURRENT or d.endswith(".manifest.json"):
-                # superseded pre-r13 pointer layout: once the commit log
-                # exists it is the only source of truth, and a lingering
-                # pointer would mislead a legacy reader into stale state
-                self.fs.delete(os.path.join(self.table_dir, d))
         # dedupe labels (replay records share one) preserving order
         out: dict[str, None] = {}
         for v in dropped:
@@ -1039,9 +1013,7 @@ class ParquetUpsertTable:
                 return r
         return None
 
-    def _label_conflict(
-        self, label: str, head: dict | None
-    ) -> tuple[dict | None, str | None]:
+    def _label_conflict(self, label: str) -> tuple[dict | None, str | None]:
         """Why an existing ``table_dir/<label>`` dir must not be blindly
         overwritten: ``(committing record or None, referenced-reason or
         None)`` in ONE pass over the retained log. Both None means a
@@ -1055,15 +1027,14 @@ class ParquetUpsertTable:
         one loses committed rows (the r16 review's
         fresh-stream-at-batch-0 scenario: head at v5 whose map still
         references v0/pb=k — the head-label collision check alone never
-        fires, but the overwrite of v0 destroys live data). Only
+        fires, but the overwrite of v0 destroys live data). The head is
+        the newest readable record, so the scan covers it too. Only
         consulted when the output dir already exists, so the healthy
         merge path pays nothing; the record scan is bounded by vacuum
         retention.
         """
         owner: dict | None = None
         ref: str | None = None
-        if head is not None and head.get("version") == label:
-            ref = "it is the live head version"  # legacy-pointer tables
         for s in reversed(self._commit_seqs()):
             r = self._record(s)
             if r is None:
@@ -1077,11 +1048,6 @@ class ParquetUpsertTable:
                 ref = f"commit record {s}'s bucket map references it"
             if owner is not None and ref is not None:
                 break
-        if ref is None and head is not None and any(
-            rel.startswith(f"{label}/")
-            for rel in head.get("buckets", {}).values()
-        ):
-            ref = "the live head's bucket map references it"
         return owner, ref
 
     # -- write side --------------------------------------------------------
@@ -1175,7 +1141,7 @@ class ParquetUpsertTable:
             # with no surviving record or reference re-merges
             # idempotently: stored rows keep their _scn, so replayed
             # older events can never overwrite newer state).
-            owner, ref = self._label_conflict(label, manifest)
+            owner, ref = self._label_conflict(label)
             if owner is not None:
                 if self._other_stream(self.stream_id, owner.get("stream_id")):
                     raise RuntimeError(
@@ -1536,7 +1502,10 @@ class ParquetUpsertTable:
         return True
 
     def foreach_batch(self, min_batch_events: int = 0):
-        """The function handed to ``writeStream.foreachBatch``.
+        """The per-batch sink step — unwrap, then merge or spool — and the
+        only merge-or-spool rule: :func:`materialize_stream` hands it to
+        ``foreachBatch`` directly, and every ``pipeline`` shape calls it
+        per table from its own batch function.
 
         ``min_batch_events > 0`` coalesces undersized micro-batches: rows
         are spooled until the staged total reaches the threshold, then one
@@ -1559,24 +1528,24 @@ class ParquetUpsertTable:
         return fn
 
 
-def materialize_stream(
-    env_stream: DataFrame,
-    table: ParquetUpsertTable,
+def start_sink(
+    stream: DataFrame,
+    batch_fn: Callable[[DataFrame, int], None],
     checkpoint_dir: str,
+    tables: Iterable[ParquetUpsertTable],
     trigger_once: bool = True,
-    min_batch_events: int = 0,
 ) -> StreamingQuery:
-    """Run the envelope stream into the upsert table (S1/S7).
+    """Start ``stream`` as a ``foreachBatch`` query whose ``batch_fn``
+    writes into ``tables`` — the one place a sink query starts
+    (:func:`materialize_stream` and every ``pipeline`` shape).
 
     ``checkpointLocation`` provides the OLR-checkpoint-equivalent resume
     contract: offsets of consumed source files + commit log of completed
-    batches (R15). ``min_batch_events`` (CDC_STEADY_r09): coalesce
-    undersized micro-batches in the spool and MERGE once the staged total
-    crosses the threshold — call ``table.flush_spool(...)`` after the
-    stream terminates to publish a sub-threshold tail.
+    batches (R15). ``trigger_once`` drains what is available and stops
+    (``availableNow``).
 
-    A handle with no ``stream_id`` adopts the checkpoint path as its
-    replay identity (r15 ADVICE): stable across restarts from the same
+    Every table handle with no ``stream_id`` adopts the checkpoint path as
+    its replay identity (r15 ADVICE): stable across restarts from the same
     checkpoint, distinct for a fresh checkpoint elsewhere — so a fresh
     stream reprocessing into an existing table dir raises on a batch-id
     label collision instead of silently dropping the batch. The path is
@@ -1595,18 +1564,19 @@ def materialize_stream(
     version-dir guard in :meth:`ParquetUpsertTable.merge_batch` catches
     the destructive cases, and callers needing strict identity pass an
     explicit per-run ``stream_id`` (e.g. the StreamingQuery's
-    ``query.id``). An id AUTO-derived by a previous materialize_stream
-    call is re-derived for this run's checkpoint (not reused), so one
-    handle driven through two checkpoints never stamps the first
-    stream's identity on the second.
+    ``query.id``). An id AUTO-derived by a previous call is re-derived
+    for this run's checkpoint (not reused), so one handle driven through
+    two checkpoints never stamps the first stream's identity on the
+    second.
     """
     auto_id = f"ckpt:{_canon_ckpt_path(checkpoint_dir)}"
-    if table.stream_id is None or getattr(table, "_auto_stream_id", False):
-        table.stream_id = auto_id
-        table._auto_stream_id = True
+    for table in tables:
+        if table.stream_id is None or getattr(table, "_auto_stream_id", False):
+            table.stream_id = auto_id
+            table._auto_stream_id = True
     writer = (
-        env_stream.writeStream.outputMode("update")
-        .foreachBatch(table.foreach_batch(min_batch_events=min_batch_events))
+        stream.writeStream.outputMode("update")
+        .foreachBatch(batch_fn)
         .option("checkpointLocation", checkpoint_dir)
     )
     if trigger_once:
@@ -1614,21 +1584,46 @@ def materialize_stream(
     return writer.start()
 
 
+def materialize_stream(
+    env_stream: DataFrame,
+    table: ParquetUpsertTable,
+    checkpoint_dir: str,
+    trigger_once: bool = True,
+    min_batch_events: int = 0,
+) -> StreamingQuery:
+    """Run the envelope stream into the upsert table (S1/S7) through
+    :func:`start_sink` (resume contract and replay identity are described
+    there). ``min_batch_events`` (CDC_STEADY_r09): coalesce undersized
+    micro-batches in the spool and MERGE once the staged total crosses
+    the threshold — call :func:`run_to_completion` (or
+    ``table.flush_spool(...)``) after the stream terminates to publish a
+    sub-threshold tail.
+    """
+    return start_sink(
+        env_stream,
+        table.foreach_batch(min_batch_events),
+        checkpoint_dir,
+        [table],
+        trigger_once,
+    )
+
+
 def run_to_completion(
     query: StreamingQuery,
-    table: ParquetUpsertTable,
+    *tables: ParquetUpsertTable,
     timeout_sec: float | None = None,
 ) -> bool:
-    """Await stream termination, then publish any sub-threshold spool tail.
+    """Await stream termination, then publish every table's sub-threshold
+    spool tail (one table, or each sink of a fan-out query).
 
     The companion to ``min_batch_events`` (ADVICE r10): without it, a
     bounded run whose total events fall below the threshold commits its
     checkpoint offsets while the rows sit durably-but-unpublished in the
-    spool. Returns True if a tail merge ran. Safe when no spool is in
+    spool. Returns True if any tail merge ran. Safe when no spool is in
     play (flush of an empty spool is a no-op).
 
     When ``timeout_sec`` expires with the query still running (wedged or
-    merely slow), the query is STOPPED before the spool is touched —
+    merely slow), the query is STOPPED before any spool is touched —
     flushing concurrently with an active stream could delete a batch the
     stream stages after the flush's listing, losing its checkpointed
     events permanently. Stop-then-flush keeps the invariant: a batch is
@@ -1640,22 +1635,6 @@ def run_to_completion(
     elif not query.awaitTermination(timeout_sec):
         query.stop()
         query.awaitTermination()  # stop() is async; wait until no batch runs
-    return table.flush_spool()
-
-
-def run_all_to_completion(
-    query: StreamingQuery,
-    tables,
-    timeout_sec: float | None = None,
-) -> bool:
-    """Multi-sink form of :func:`run_to_completion` (fanout pipelines):
-    one await (same stop-before-flush discipline), then every table's
-    spool tail is published. Returns True if any tail merge ran."""
-    if timeout_sec is None:
-        query.awaitTermination()
-    elif not query.awaitTermination(timeout_sec):
-        query.stop()
-        query.awaitTermination()
     flushed = False
     for table in tables:
         flushed = table.flush_spool() or flushed

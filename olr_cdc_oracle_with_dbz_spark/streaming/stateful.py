@@ -94,11 +94,6 @@ def _assemble_fn(
     return _assemble
 
 
-#: legacy module-level form (keep-everything policy) — existing imports and
-#: the checkpoint-resume tests bind this name
-_assemble = _assemble_fn(None)
-
-
 def assemble_transactions(
     env_stream: DataFrame, idle_timeout_ms: int | None = None
 ) -> DataFrame:

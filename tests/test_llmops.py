@@ -556,3 +556,50 @@ def test_trigram_kernel_matches_jvm_shingle_chain(spark):
             .astype({"sz": "int64"})
         )
         assert old.equals(new), f"use_kernel={use_kernel} diverged"
+
+
+def test_fixedlist_matrix_non_list_layouts_match_vstack():
+    """The zero-copy path reads int32 list offsets, so it must only run on
+    ``list<float>``. ``large_list`` (int64 offsets) and ``fixed_size_list``
+    (no offsets buffer) take the vstack path and match it exactly, sliced
+    or not."""
+    import numpy as np
+    import pyarrow as pa
+
+    from olr_cdc_oracle_with_dbz_spark.llmops.similarity import _fixedlist_matrix
+
+    rows = [[1.5, -2.0, 3.25], [0.0, 4.0, -0.5], [7.0, 8.0, 9.0], [1.0, 2.0, 3.0]]
+    want = np.vstack([np.asarray(r, dtype=np.float64) for r in rows])
+    for vt in (pa.float32(), pa.float64()):
+        for typ in (pa.list_(vt), pa.large_list(vt), pa.list_(vt, 3)):
+            arr = pa.array(rows, type=typ)
+            got = _fixedlist_matrix(arr)
+            assert got.dtype == np.float64 and (got == want).all(), typ
+            assert (_fixedlist_matrix(arr.slice(1, 2)) == want[1:3]).all(), typ
+            chunked = pa.chunked_array([arr.slice(0, 1), arr.slice(1)])
+            assert (_fixedlist_matrix(chunked) == want).all(), typ
+
+
+def test_propagation_releases_superseded_label_checkpoints(spark):
+    """Each propagation round cuts lineage with a localCheckpoint; once the
+    next round's cut is materialized the previous one is released, so the
+    persisted RDDs left behind are the edge list, the connected nodes and
+    the final labels, not one label copy per round."""
+    import pyspark.sql.functions as F
+
+    from olr_cdc_oracle_with_dbz_spark.llmops.dedup import _propagate_min_labels
+
+    n = 64
+    pairs = spark.range(n - 1).select(
+        F.col("id").alias("s"), (F.col("id") + 1).alias("d")
+    )
+    raw = pairs.union(pairs.select(F.col("d").alias("s"), F.col("s").alias("d")))
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    labels, _connected = _propagate_min_labels(
+        raw, 2 * (n - 1), edges_per_task=1_000_000
+    )
+    assert (labels.toPandas()["lab"] == 0).all()
+    # a 64-chain takes ~7 rounds; without the release every round's label
+    # checkpoint would still be persisted here
+    assert jsc.getPersistentRDDs().size() - before <= 3

@@ -29,12 +29,11 @@ PUT). The suite proves, through that FS:
 
 from __future__ import annotations
 
-import json
 import os
 
 import pytest
 
-from olr_cdc_oracle_with_dbz_spark.cdc.schema_registry import SchemaRegistry
+from olr_cdc_oracle_with_dbz_spark.cdc.schema_registry import SchemaRegistry, _seal
 from olr_cdc_oracle_with_dbz_spark.fs import LocalFS
 from olr_cdc_oracle_with_dbz_spark.streaming.materialize import ParquetUpsertTable
 
@@ -157,47 +156,6 @@ def test_torn_head_record_skipped_by_readers_blocks_writers(spark, tmp_path):
     assert t.read().count() == 2
 
 
-def test_legacy_pointer_table_migrates_on_next_commit(spark, tmp_path):
-    """A pre-r13 table (``_CURRENT`` pointer + ``*.manifest.json``) reads
-    as commit 0 and its next merge appends record 1 — the log supersedes
-    the pointer with no rewrite of existing data."""
-    fs = ObjectStoreFS()
-    tdir = str(tmp_path / "tbl")
-    t = ParquetUpsertTable(spark, tdir, key="id", n_buckets=4, fs=fs)
-    t.merge_batch(_frame(spark, [(i, f"n{i}", 100 + i, False) for i in range(6)]), 1)
-
-    # rewrite the commit into the PRE-r13 layout
-    seq, m = t._head()
-    label = m["version"]
-    with open(os.path.join(tdir, f"{label}.manifest.json"), "w") as f:
-        json.dump({"n_buckets": m["n_buckets"], "buckets": m["buckets"]}, f)
-    with open(os.path.join(tdir, "_CURRENT"), "w") as f:
-        f.write(label)
-    import shutil
-
-    shutil.rmtree(os.path.join(tdir, "_commits"))
-
-    legacy = ParquetUpsertTable(spark, tdir, key="id", fs=fs)
-    assert legacy.n_buckets == 4  # adopted from the legacy manifest
-    assert legacy.current_version() == label
-    assert legacy.read().count() == 6
-    assert legacy.read_keys([3]).count() == 1
-
-    legacy.merge_batch(_frame(spark, [(3, "upd3", 200, False)]), 2)
-    assert legacy._head()[0] == 1  # first log record
-    state = {r["id"]: r["name"] for r in legacy.read().collect()}
-    assert state[3] == "upd3" and len(state) == 6
-
-    # vacuum clears the superseded pointer layout (a lingering _CURRENT
-    # would mislead a legacy reader into the pre-migration state)
-    legacy.vacuum(keep=2)
-    assert not fs.exists(os.path.join(tdir, "_CURRENT"))
-    assert not any(
-        n.endswith(".manifest.json") for n in fs.list_names(tdir)
-    )
-    assert legacy.read().count() == 6  # table unaffected
-
-
 def test_compact_fence_failure_keeps_handle_on_live_layout(spark, tmp_path):
     """ADVICE r12: a re-bucketing compaction whose commit loses the fence
     must NOT leave the handle on the new bucket count — a caller that
@@ -289,7 +247,7 @@ def test_schema_registry_through_object_store_fs(spark, tmp_path):
     # lost race, same content: converge on the winner's version
     other = SchemaRegistry(str(tmp_path / "schemas"), "OLR_DB.PRODUCT", fs=fs)
     fs.create_exclusive(
-        os.path.join(other.dir, "v3.ddl"), "id bigint, name string, x int"
+        os.path.join(other.dir, "v3.ddl"), _seal("id bigint, name string, x int")
     )  # a concurrent registrant wins v3 first
     assert other.register("id bigint, name string, x int") == 3
     # lost race, DIFFERENT content: take the next number

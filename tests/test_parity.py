@@ -73,3 +73,48 @@ def test_q23_null_groups_match_count_distinct_semantics(spark, tmp_path):
         "X": (1, 2, 0),
         None: (1, 1, 1),
     }
+
+
+def test_q43c_negative_zero_zip_dot_matches_oracle(spark, tmp_path):
+    """A zip_dot whose decimal sum is a small negative rounds to zero:
+    DuckDB's ROUND keeps the sign (-0.0) and the driver hashes the
+    rendered value, so the Spark side must return -0.0 too, not +0.0."""
+    import duckdb
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from olr_cdc_oracle_with_dbz_spark.plans.parity import compare_frames
+
+    sf = tmp_path / "sfnegzero"
+    sf.mkdir()
+    zeros = [0.0] * 16
+    negzero = list(zeros)
+    negzero[0], negzero[8] = -0.0005, 0.0008  # product ~ -4e-7 -> -0.0
+    poszero = list(zeros)
+    poszero[0], poszero[8] = 0.0005, 0.0008  # product ~ +4e-7 -> +0.0
+    plain = [float(i % 5) - 2.0 for i in range(16)]
+    table = pa.table(
+        {
+            "vec_id": pa.array([1, 2, 3, 4], pa.int64()),
+            "embedding": pa.array(
+                [negzero, poszero, plain, zeros], pa.list_(pa.float32())
+            ),
+            "label": pa.array([0, 0, 0, 0], pa.int32()),
+        }
+    )
+    pq.write_table(table, sf / "embeddings.parquet")
+
+    spec = load_all()["q43c_higher_order"]
+    got = spec.spark_fn(spark, str(sf)).toPandas()
+    con = duckdb.connect()
+    try:
+        con.execute(
+            f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{sf}/embeddings.parquet')"
+        )
+        want = con.execute(spec.oracle).df()
+    finally:
+        con.close()
+    assert np.signbit(want["zip_dot"].iloc[0])  # the oracle's -0.0 row
+    ok, msg = compare_frames(got, want)
+    assert ok, msg

@@ -377,21 +377,6 @@ def test_schema_registry_torn_record_detected_and_healed(tmp_path):
         torn.register("id bigint, name string")
         with pytest.raises(RuntimeError, match="torn record"):
             SchemaRegistry(sub, "S").current()
-
-    # legacy pre-sealing records (plain DDL, never starts with '#') read
-    # verbatim and match idempotency — no migration needed
-    legacy_dir = str(tmp_path / "legacy")
-    legacy = SchemaRegistry(legacy_dir, "S")
-    LocalFS().create_exclusive(
-        os.path.join(legacy.dir, "v1.ddl"), "id bigint, name string"
-    )
-    assert legacy.current() == "id bigint, name string"
-    assert legacy.register("id bigint, name string") == 1
-    # and a NEW registration beside a legacy record is sealed + verified
-    assert legacy.register("id bigint, name string, x int") == 2
-    assert legacy.fs.read_text(
-        os.path.join(legacy.dir, "v2.ddl")
-    ).startswith("#sha256:")
     assert _seal("x") .startswith("#sha256:")
 
 
@@ -434,3 +419,86 @@ def test_quarantine_dead_letters_replay_idempotent(spark, tmp_path):
         for r in t2.read().select("id", "name", "price", "stock").orderBy("id").collect()
     ]
     assert rows2 == golden
+
+
+def test_fanout_max_files_per_trigger_bounds_micro_batches(spark, tmp_path):
+    """source.max_files_per_trigger applies to every pipeline shape: a
+    fan-out run over two source files with a one-file bound commits two
+    micro-batches, and routing still converges every table."""
+    import json as _json
+
+    from olr_cdc_oracle_with_dbz_spark.pipeline import run_fanout_pipeline
+
+    src = str(tmp_path / "fan_in")
+    lines = json_lines()
+    other = [
+        _json.dumps({**_json.loads(s), "source": {**_json.loads(s)["source"], "table": "INVENTORY"}})
+        for s in lines[:5]
+    ]
+    _write(src, lines[:6] + other[:3], "b0.jsonl")
+    _write(src, lines[6:] + other[3:], "b1.jsonl")
+    ckpt = str(tmp_path / "fan_ck")
+    config = {
+        "source": {"format": "debezium-json", "path": src, "max_files_per_trigger": 1},
+        "filter": {"schema": "OLR_DB", "tables": ["PRODUCT", "INVENTORY"]},
+        "sink": {"root_dir": str(tmp_path / "tables"), "pk": "id"},
+        "checkpoint": ckpt,
+    }
+    q, sinks = run_fanout_pipeline(spark, config)
+    q.awaitTermination(120)
+
+    commits = [n for n in os.listdir(os.path.join(ckpt, "commits")) if n[0] != "."]
+    assert sorted(commits) == ["0", "1"]
+    for t, table in sinks.items():
+        assert len(table.versions()) == 2, t  # one merge per micro-batch
+    assert {r["id"] for r in sinks["PRODUCT"].read().collect()} == {
+        r[0] for r in EXPECTED_FINAL
+    }
+    assert {r["id"] for r in sinks["INVENTORY"].read().collect()} == {1, 2, 3, 4}
+
+
+def test_pipeline_shapes_derive_canonical_ckpt_identity(spark, tmp_path, monkeypatch):
+    """Every pipeline shape stamps its sinks with the canonical ``ckpt:``
+    identity materialize_stream derives, so a relative, trailing-slash
+    checkpoint spelling names the same stream as its absolute form."""
+    from olr_cdc_oracle_with_dbz_spark.pipeline import run_fanout_pipeline
+    from olr_cdc_oracle_with_dbz_spark.streaming.materialize import _canon_ckpt_path
+
+    # Spark resolves a relative checkpoint against the JVM's working dir;
+    # run the driver side from the same dir so both read one location
+    jvm_cwd = spark._jvm.java.lang.System.getProperty("user.dir")
+    monkeypatch.chdir(jvm_cwd)
+
+    src = str(tmp_path / "in")
+    _write(src, json_lines(), "b0.jsonl")
+
+    def rel(name: str) -> str:
+        return os.path.relpath(str(tmp_path / name), jvm_cwd) + "/"
+
+    source = {"format": "debezium-json", "path": src}
+    quarantine_cfg = {
+        "source": source,
+        "filter": {"schema": "OLR_DB", "table": "PRODUCT"},
+        "sink": {"table_dir": str(tmp_path / "q_tbl"), "pk": "id"},
+        "checkpoint": rel("q_ck"),
+        "quarantine": str(tmp_path / "dead"),
+    }
+    fanout_cfg = {
+        "source": source,
+        "filter": {"schema": "OLR_DB", "tables": ["PRODUCT"]},
+        "sink": {"root_dir": str(tmp_path / "fan"), "pk": "id"},
+        "checkpoint": rel("f_ck"),
+    }
+    q, q_table = run_pipeline(spark, quarantine_cfg)
+    q.awaitTermination(120)
+    q2, sinks = run_fanout_pipeline(spark, fanout_cfg)
+    q2.awaitTermination(120)
+
+    for cfg, table, name in (
+        (quarantine_cfg, q_table, "q_ck"),
+        (fanout_cfg, sinks["PRODUCT"], "f_ck"),
+    ):
+        want = "ckpt:" + _canon_ckpt_path(cfg["checkpoint"])
+        assert want == f"ckpt:{tmp_path / name}"
+        assert table.stream_id == want
+        assert table._head()[1]["stream_id"] == want  # stamped on commit

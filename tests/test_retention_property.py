@@ -132,13 +132,13 @@ def test_log_invariants_under_random_ops(tmp_path_factory, ops):
             for rel in r["buckets"].values()
         }
         for lab in committed | referenced:
-            owner, ref = t._label_conflict(lab, head_m)
+            owner, ref = t._label_conflict(lab)
             if lab in committed:
                 assert owner is not None and owner["version"] == lab
             else:
                 assert owner is None and ref is not None
         fresh_label = f"v{(max(model) if model else 0) + 1000:020d}"
-        assert t._label_conflict(fresh_label, head_m) == (None, None)
+        assert t._label_conflict(fresh_label) == (None, None)
         # r17 (ADVICE r16 #1): the merge gate must consult the scan for
         # every in-use label, INCLUDING labels whose version dir is gone
         # (commit_empty records never had one). Fixed-width labels order

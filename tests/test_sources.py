@@ -294,7 +294,9 @@ def test_assemble_tolerates_null_scn():
     count toward totals but carry no SCN position."""
     import pandas as pd
 
-    from olr_cdc_oracle_with_dbz_spark.streaming.stateful import _assemble
+    from olr_cdc_oracle_with_dbz_spark.streaming.stateful import _assemble_fn
+
+    _assemble = _assemble_fn(None)
 
     class _State:
         exists = False
@@ -431,10 +433,9 @@ def test_assemble_idle_timeout_evicts_completed_transactions():
     active stream."""
     import pandas as pd
 
-    from olr_cdc_oracle_with_dbz_spark.streaming.stateful import (
-        _assemble,
-        _assemble_fn,
-    )
+    from olr_cdc_oracle_with_dbz_spark.streaming.stateful import _assemble_fn
+
+    _assemble = _assemble_fn(None)
 
     class _State:
         exists = False
