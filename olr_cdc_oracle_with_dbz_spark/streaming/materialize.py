@@ -15,8 +15,13 @@ Delta's transaction log:
       _commits/c00000000000000000001.json
           # one IMMUTABLE record per commit, created with
           # fs.create_exclusive (put-if-absent, never renamed, never
-          # overwritten): {"version": "v...042", "n_buckets": N,
-          #                "buckets": {"3": "v.../pb=3", ...}}
+          # overwritten), six fields:
+          #   "version":   "v...042" — this commit's label
+          #   "max_label": highest label in the lineage (replay gate)
+          #   "n_buckets": N — the key-hash layout
+          #   "buckets":   {"3": "v.../pb=3", ...} — live dir per bucket
+          #   "schema":    StructType.json() of the table's rows
+          #   "stream_id": writing stream's replay identity (optional)
       v00000000000042/pb=3/...parquet # bucket 3 as rewritten by batch 42
 
 "Current" is the highest-sequence record — no pointer file, no rename.
@@ -34,6 +39,10 @@ check-then-swap near-miss window is gone. The log is BOUNDED: every
 ``retain_commits``-th commit auto-vacuums old records (r14), so a
 months-running stream neither grows ``_commits/`` without limit nor
 pays an O(all-commits-ever) LIST per merge.
+
+Readers take the table schema from the record (Delta's ``metaData``
+schema string), so no read infers it from parquet footers; the writer
+already holds it on the driver when it commits.
 
 A micro-batch MERGE rewrites ONLY the buckets its keys hash into; untouched
 buckets stay referenced at their old version paths. Per-batch write cost is
@@ -69,6 +78,7 @@ from collections.abc import Callable, Iterable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import LongType, StructField, StructType
 
 from olr_cdc_oracle_with_dbz_spark.cdc.envelope import (
     PK,
@@ -77,6 +87,7 @@ from olr_cdc_oracle_with_dbz_spark.cdc.envelope import (
     unwrap,
 )
 from olr_cdc_oracle_with_dbz_spark.fs import LocalFS
+from olr_cdc_oracle_with_dbz_spark.functions.hashing import xxhash64_longs
 
 #: URI scheme detector (RFC 3986 shape) for checkpoint-path canonicalization.
 #: Requires 2+ scheme characters (r17 ADVICE): RFC 3986 permits one-letter
@@ -172,6 +183,21 @@ _IDENTITY_CAVEAT = (
 _COMMITS = "_commits"  # append-only commit log directory
 _FLOOR_EXT = ".floor"  # vacated-slot fence marker files (r15, ADVICE r14)
 _PB = "pb"  # bucket partition column
+_INT64 = range(-(1 << 63), 1 << 63)
+
+
+def _driver_buckets(
+    values: list, key_type, n_buckets: int
+) -> list[tuple[object, int]] | None:
+    """(value, bucket id) of each representable lookup value, hashed on
+    the driver — or None when the (key type, value type) pair needs
+    :meth:`ParquetUpsertTable._probe_buckets`. Only Python ``int`` values
+    against a ``bigint`` key hash here. Python's ``%`` with a positive
+    modulus is Spark's ``pmod``."""
+    if key_type == LongType() and all(isinstance(v, int) for v in values):
+        ints = [int(v) for v in values if v in _INT64]
+        return list(zip(ints, (h % n_buckets for h in xxhash64_longs(ints))))
+    return None
 
 
 class ParquetUpsertTable:
@@ -461,6 +487,7 @@ class ParquetUpsertTable:
         expect_parent: int,
         n_buckets: int | None = None,
         parent_manifest: dict | None = None,
+        schema: StructType | None = None,
     ) -> int:
         """Append one immutable commit record at sequence ``expect_parent
         + 1`` via put-if-absent; returns the committed sequence.
@@ -511,6 +538,11 @@ class ParquetUpsertTable:
         space) additionally refuses to DUPLICATE a label some retained
         record still commits — the ambiguity the merge gate prevents,
         enforced at the root for non-merge callers too.
+
+        ``schema`` is the table's row schema as written by this commit
+        (``merge_batch`` and ``compact`` pass it); None inherits the
+        parent record's, so a metadata-only commit keeps the schema its
+        unchanged data dirs were written with.
         """
         seq = expect_parent + 1
         if parent_manifest is None and expect_parent > 0:
@@ -568,6 +600,10 @@ class ParquetUpsertTable:
             "n_buckets": self.n_buckets if n_buckets is None else n_buckets,
             "buckets": buckets,
         }
+        if schema is not None:
+            rec["schema"] = schema.json()
+        elif parent_manifest is not None and "schema" in parent_manifest:
+            rec["schema"] = parent_manifest["schema"]
         if self.stream_id is not None:
             # replay-identity key (r15 ADVICE): lets merge_batch tell a
             # genuine replay of THIS stream's batch from a label collision
@@ -636,6 +672,30 @@ class ParquetUpsertTable:
         return seq
 
     # -- read side ---------------------------------------------------------
+    def _schema(self, m: dict) -> StructType:
+        """The row schema a data-bearing commit record was written with.
+        Readers pass it to the parquet reader instead of inferring one
+        from footers (a Spark job per read). Tables committed before
+        records carried a schema are not readable by this release."""
+        if "schema" not in m:
+            raise ValueError(
+                f"{self.table_dir}: commit {m.get('version')!r} references "
+                f"data but records no table schema (written before commit "
+                f"records carried one); rebuild the table from its source"
+            )
+        return StructType.fromJson(json.loads(m["schema"]))
+
+    def _scan(self, m: dict, rels: Iterable[str]) -> DataFrame:
+        """Live rows of the bucket dirs ``rels`` under record ``m``'s
+        schema, tombstones filtered out. A dir written before an additive
+        evolution reads NULL for the columns it lacks."""
+        df = self.spark.read.schema(self._schema(m)).parquet(
+            *(os.path.join(self.table_dir, rel) for rel in rels)
+        )
+        if "__deleted" in df.columns:
+            df = df.filter(~F.col("__deleted")).drop("__deleted")
+        return df
+
     def read(self, version: str | None = None) -> DataFrame | None:
         """Read the live version, or time-travel to any retained version.
 
@@ -645,28 +705,32 @@ class ParquetUpsertTable:
         Tombstoned (deleted) keys are filtered out at read time.
         """
         m = self._manifest(version)
-        if m is None:
+        if m is None or not m["buckets"]:
             return None
-        paths = [os.path.join(self.table_dir, rel) for rel in m["buckets"].values()]
-        if not paths:
-            return None
-        df = self.spark.read.option("mergeSchema", "true").parquet(*paths)
-        if "__deleted" in df.columns:
-            df = df.filter(~F.col("__deleted")).drop("__deleted")
-        return df
+        return self._scan(m, m["buckets"].values())
 
     def read_keys(self, values, version: str | None = None) -> DataFrame | None:
         """Bucket-pruned point lookup — the sink-database query pattern.
 
         The reference's users hit the JDBC sink with ``WHERE id = ?``
         (/root/reference/README.md:829-850, the Postgres side); against
-        this table the equivalent must NOT scan every bucket. The keys'
-        bucket ids are computed with the SAME Spark expression the writer
-        uses (one tiny local job over the literal values — hash semantics
-        stay in one place), then ONLY those buckets' paths are read: at
-        100 TB with thousands of buckets a point lookup touches one
-        bucket's files instead of the table. Returns None when the table
-        has no committed version (or none of the keys' buckets exist yet).
+        this table the equivalent must NOT scan every bucket. Only the
+        buckets the keys hash into are read: at 100 TB with thousands of
+        buckets a point lookup touches one bucket's files instead of the
+        table, and the returned frame's scan is the lookup's only Spark
+        job. The key type comes from the commit record's schema.
+
+        Bucket ids are ``pmod(xxhash64(CAST(v AS key type)), n_buckets)``,
+        the writer's expression. A ``bigint`` key with Python ``int``
+        values (``bool`` included, cast as Spark casts it; an int outside
+        int64 is no such key) hashes on the driver with the XXH64 twin of
+        ``functions/hashing.py`` (pinned bit-identical to ``F.xxhash64``).
+        Every other pair — floats or strings against a ``bigint`` key,
+        any value against a ``string`` or other key type, ``None`` values
+        — goes through a one-row Spark probe job before the scan, so cast
+        and coercion semantics stay Spark's own. Returns None when the
+        table has no committed version, no value is representable in the
+        key type, or none of the keys' buckets exist yet.
         """
         values = list(values)
         if not values:
@@ -681,19 +745,35 @@ class ParquetUpsertTable:
         # must prune against the layout it was written with (ADVICE r11)
         n_buckets = m.get("n_buckets", self.n_buckets)
         # xxhash64 is TYPE-sensitive (an int literal hashes differently
-        # from the same value in a long column), so the lookup literals
-        # must be cast to the STORED key dtype before hashing — read it
-        # from one bucket's parquet footer (driver-side metadata only)
-        any_path = os.path.join(self.table_dir, next(iter(m["buckets"].values())))
-        key_type = dict(
-            (f.name, f.dataType) for f in self.spark.read.parquet(any_path).schema
-        )[self.key]
+        # from the same value in a long column), so lookups hash and
+        # compare as the STORED key type
+        key_type = self._schema(m)[self.key].dataType
+        keyed = _driver_buckets(values, key_type, n_buckets)
+        if keyed is None:
+            keyed = self._probe_buckets(values, key_type, n_buckets)
+        if not keyed:
+            return None  # no lookup value is representable in the key type
+        buckets = {str(b) for _v, b in keyed}
+        rels = [rel for b, rel in m["buckets"].items() if b in buckets]
+        if not rels:
+            return None
+        # filter with the SAME cast literals used for bucket hashing —
+        # raw Python values can compare differently than they hash (e.g.
+        # int lookups against a string key column), so pruning and
+        # filtering must agree on the comparison type (ADVICE r11)
+        cast_lits = [F.lit(v).cast(key_type) for v, _b in keyed]
+        return self._scan(m, rels).filter(F.col(self.key).isin(*cast_lits))
+
+    def _probe_buckets(
+        self, values: list, key_type, n_buckets: int
+    ) -> list[tuple[object, int]]:
+        """(value, bucket id) of each lookup value whose cast to
+        ``key_type`` round-trips, computed by one tiny local Spark job:
+        each value's bucket id AND whether ``lit(v) == cast(v)`` under
+        Spark's comparison coercion. A LOSSY cast — e.g. 3.9 against a
+        bigint key — must mean "no such key", not a silent match of key
+        3; NULL-producing casts and None lookups drop the same way."""
         cast_lits = [F.lit(v).cast(key_type) for v in values]
-        # one tiny local job per lookup: each value's bucket id AND whether
-        # the cast round-trips (`lit(v) == cast(v)` under Spark's comparison
-        # coercion). A LOSSY cast — e.g. 3.9 against a bigint key — must
-        # mean "no such key", not a silent match of key 3; NULL-producing
-        # casts and None lookups drop the same way.
         probe = [
             F.struct(
                 F.pmod(F.xxhash64(c), F.lit(n_buckets)).alias("b"),
@@ -707,25 +787,7 @@ class ParquetUpsertTable:
             .select("p.b", "p.ok")
             .collect()
         )  # ≤ len(values) scalars — bounded, not data-sized
-        cast_lits = [c for c, r in zip(cast_lits, rows) if r["ok"]]
-        if not cast_lits:
-            return None  # no lookup value is representable in the key type
-        buckets = {str(r["b"]) for r in rows if r["ok"]}
-        paths = [
-            os.path.join(self.table_dir, rel)
-            for b, rel in m["buckets"].items()
-            if b in buckets
-        ]
-        if not paths:
-            return None
-        df = self.spark.read.option("mergeSchema", "true").parquet(*paths)
-        if "__deleted" in df.columns:
-            df = df.filter(~F.col("__deleted")).drop("__deleted")
-        # filter with the SAME cast literals used for bucket hashing —
-        # raw Python values can compare differently than they hash (e.g.
-        # int lookups against a string key column), so pruning and
-        # filtering must agree on the comparison type (ADVICE r11)
-        return df.filter(F.col(self.key).isin(*cast_lits))
+        return [(v, r["b"]) for v, r in zip(values, rows) if r["ok"]]
 
     def versions(self) -> list[str]:
         """All retained version LABELS, oldest→newest (commit order). A
@@ -1179,11 +1241,15 @@ class ParquetUpsertTable:
                 # consistent — and a long-lived foreachBatch handle keeps
                 # working across a maintenance re-bucket.
                 self.n_buckets = committed
+        buckets = dict(manifest["buckets"]) if manifest else {}
+        # the committed schema (raises on a record that lacks one before
+        # any job runs); the read-back below uses it, so no read infers
+        # a schema from footers
+        stored = self._schema(manifest) if buckets else None
         batch = unwrapped.withColumn(_PB, self._bucket_col())
         touched = sorted(
             r[0] for r in batch.select(_PB).distinct().collect()
         )  # ≤ n_buckets scalars on the driver — bounded, not data-sized
-        buckets = dict(manifest["buckets"]) if manifest else {}
         src = batch
         # One read per VERSION dir (partition discovery restores pb from
         # the _PB=k path segments), not one read+union per bucket: a
@@ -1202,14 +1268,14 @@ class ParquetUpsertTable:
             vdir = os.path.join(self.table_dir, version)
             df = (
                 self.spark.read.option("basePath", vdir)
+                .schema(StructType([*stored, StructField(_PB, LongType())]))
                 .parquet(*[os.path.join(vdir, f"{_PB}={b}") for b in bs])
-                .withColumn(_PB, F.col(_PB).cast("bigint"))
             )
             bases.append(df)
         if bases:
             base = bases[0]
             for extra in bases[1:]:
-                base = base.unionByName(extra, allowMissingColumns=True)
+                base = base.union(extra)  # one stored schema: same columns
             # stored rows keep the _scn (and tombstones) they were
             # materialized at, so a replayed/late older event can never
             # overwrite newer state or resurrect a deleted key.
@@ -1225,8 +1291,19 @@ class ParquetUpsertTable:
         new_state.write.partitionBy(_PB).mode("overwrite").parquet(out)
         for b in touched:
             buckets[str(b)] = f"{label}/{_PB}={b}"
+        # the schema of the rows just written (known on the driver: no
+        # job), plus any stored column this batch's rows lack — the
+        # untouched buckets still carry it
+        written = [f for f in new_state.schema if f.name != _PB]
+        names = {f.name for f in written}
+        if stored is not None:
+            written += [f for f in stored if f.name not in names]
         self._commit(
-            label, buckets, expect_parent=parent_seq, parent_manifest=manifest
+            label,
+            buckets,
+            expect_parent=parent_seq,
+            parent_manifest=manifest,
+            schema=StructType(written),
         )
 
     def compact(
@@ -1265,9 +1342,9 @@ class ParquetUpsertTable:
         n = self.n_buckets if n_buckets is None else n_buckets
         label = f"{manifest['version']}c"  # e.g. v...042 -> v...042c
         out = os.path.join(self.table_dir, label)
+        rows = current.withColumn("__deleted", F.lit(False))
         (
-            current.withColumn("__deleted", F.lit(False))
-            .withColumn(_PB, self._bucket_col(n))
+            rows.withColumn(_PB, self._bucket_col(n))
             .repartition(target_partitions, F.col(_PB))
             .sortWithinPartitions(_PB, self.key)
             .write.partitionBy(_PB)
@@ -1285,6 +1362,7 @@ class ParquetUpsertTable:
             expect_parent=parent_seq,
             n_buckets=n,
             parent_manifest=manifest,
+            schema=rows.schema,
         )
         self.n_buckets = n  # only after a successful commit
 

@@ -37,11 +37,11 @@ def test_minhash_numpy_xxh64_matches_jvm(spark):
     an arithmetic relocation, not a semantic change."""
     import numpy as np
 
-    from olr_cdc_oracle_with_dbz_spark.llmops.dedup import (
-        _N_PERM,
+    from olr_cdc_oracle_with_dbz_spark.functions.hashing import (
         _xxh64_int_seed,
         _xxh64_long_vec,
     )
+    from olr_cdc_oracle_with_dbz_spark.llmops.dedup import _N_PERM
 
     # the kernel must cloudpickle BY VALUE (factory-local qualname), so the
     # Python workers never need this package on their import path — a
@@ -461,10 +461,10 @@ def test_xxh64_bytes_kernel_matches_jvm_strings(spark):
 
     import numpy as np
 
-    from olr_cdc_oracle_with_dbz_spark.llmops.dedup import (
-        _trigram_shingles,
+    from olr_cdc_oracle_with_dbz_spark.functions.hashing import (
         _xxh64_bytes_slices,
     )
+    from olr_cdc_oracle_with_dbz_spark.llmops.dedup import _trigram_shingles
 
     assert "<locals>" in _xxh64_bytes_slices.__qualname__
     assert "<locals>" in _trigram_shingles.__qualname__

@@ -979,6 +979,143 @@ def test_read_keys_string_key_filter_uses_cast_literals(spark, tmp_path):
     assert {x["id"] for x in got.collect()} == {"7", "2"}
 
 
+def _mk_rows(spark, rows):
+    return spark.createDataFrame(
+        rows, "id bigint, name string, _scn bigint, __deleted boolean"
+    )
+
+
+def _record_cols(record: dict) -> list[str]:
+    """Column names of the schema a commit record carries."""
+    import json
+
+    from pyspark.sql.types import StructType
+
+    return StructType.fromJson(json.loads(record["schema"])).fieldNames()
+
+
+def test_read_keys_out_of_range_and_non_finite_mean_no_such_key(spark, tmp_path):
+    """An int the bigint key cannot represent is no such key — the same
+    rule as the lossy cast of 3.9 — not a literal-overflow error; NaN and
+    ±inf (which go through the Spark probe) stay no such key too."""
+    t = ParquetUpsertTable(spark, str(tmp_path / "tbl"), key="id")
+    t.merge_batch(_mk_rows(spark, [(i, f"n{i}", 100 + i, False) for i in range(6)]), 1)
+    assert t.read_keys([2**70]) is None
+    assert t.read_keys([-(2**63) - 1]) is None
+    assert {r["id"] for r in t.read_keys([2**70, 3]).collect()} == {3}
+    for v in (float("nan"), float("inf"), float("-inf")):
+        assert t.read_keys([v]) is None
+
+
+def _jobs_run(spark, fn) -> int:
+    """Spark jobs ``fn`` schedules, counted through a job group. AQE is
+    off for the count: it submits every shuffle stage as its own job, so
+    the pins below would otherwise count stages, not reads."""
+    import uuid
+
+    sc = spark.sparkContext
+    grp = f"sink-job-pin-{uuid.uuid4().hex}"
+    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        sc.setJobGroup(grp, grp, interruptOnCancel=False)
+        fn()
+    finally:
+        sc.setJobGroup(None, None)
+        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
+    return len(sc.statusTracker().getJobIdsForGroup(grp))
+
+
+def test_sink_reads_infer_no_schema_job_count_pins(spark, tmp_path):
+    """The commit record carries the table schema and the driver hashes
+    int lookups on a bigint key, so such a point lookup is ONE job (its
+    scan), a full read is one job, and a merge into a populated table is
+    two (the touched-bucket collect and the write) — no footer-inference
+    job. A string-key lookup keeps its one-row probe: two jobs."""
+    t = ParquetUpsertTable(spark, str(tmp_path / "tbl"), key="id")
+    t.merge_batch(_mk_rows(spark, [(i, f"n{i}", 100 + i, False) for i in range(50)]), 1)
+    assert _jobs_run(spark, lambda: t.read_keys([7]).collect()) == 1
+    assert _jobs_run(spark, lambda: t.read().count()) == 1
+    upd = _mk_rows(spark, [(i, "u", 500 + i, False) for i in range(0, 50, 5)])
+    assert _jobs_run(spark, lambda: t.merge_batch(upd, 2)) == 2
+    assert t.read().count() == 50
+
+    s = ParquetUpsertTable(spark, str(tmp_path / "str_tbl"), key="id")
+    s.merge_batch(
+        spark.createDataFrame(
+            [(str(i), f"n{i}", 100 + i, False) for i in range(20)],
+            "id string, name string, _scn bigint, __deleted boolean",
+        ),
+        1,
+    )
+    assert _jobs_run(spark, lambda: s.read_keys(["7"]).collect()) == 2
+    assert [r["name"] for r in s.read_keys(["7"]).collect()] == ["n7"]
+
+
+def test_commit_record_schema_follows_additive_evolution(spark, tmp_path):
+    """R10 extra_cols evolution with the schema in the commit record: the
+    head record names the evolved column, a pre-evolution key reads NULL
+    for it (also from a bucket file written before the column existed),
+    and time travel to the pre-evolution label returns the old schema."""
+    tdir = str(tmp_path / "tbl")
+    t = ParquetUpsertTable(spark, tdir, key="id", n_buckets=4)
+    t.merge_batch(_mk_rows(spark, [(i, f"n{i}", 100 + i, False) for i in range(12)]), 1)
+    old_label = t.current_version()
+    old_cols = t.read().columns
+    assert "category" not in old_cols
+
+    evolved = ParquetUpsertTable(spark, tdir, key="id", extra_cols=("category",))
+    evolved.merge_batch(
+        spark.createDataFrame(
+            [(100, "new", 200, False, "tools")],
+            "id bigint, name string, _scn bigint, __deleted boolean, category string",
+        ),
+        2,
+    )
+    _seq, head = evolved._head()
+    assert "category" in _record_cols(head)
+    # one bucket rewritten; the others still reference pre-evolution files
+    assert {rel.split("/")[0] for rel in head["buckets"].values()} == {
+        old_label,
+        evolved.current_version(),
+    }
+
+    rows = evolved.read_keys(list(range(12))).collect()
+    assert len(rows) == 12 and all(r["category"] is None for r in rows)
+    assert [r["category"] for r in evolved.read_keys([100]).collect()] == ["tools"]
+    assert evolved.read(version=old_label).columns == old_cols
+    assert evolved.read_keys([3], version=old_label).columns == old_cols
+
+
+def test_commit_record_schema_recorded_inherited_and_required(spark, tmp_path):
+    """Every commit records the schema it wrote (an empty first batch and
+    a compaction included); a metadata-only ``_commit`` inherits the
+    parent's; a data-bearing record with none raises a ValueError naming
+    the table instead of inferring one."""
+    import re
+
+    tdir = str(tmp_path / "tbl")
+    t = ParquetUpsertTable(spark, tdir, key="id", n_buckets=4)
+    t.merge_batch(_mk_rows(spark, []), 1)  # empty first batch: no job needed
+    cols = ["id", "name", "_scn", "__deleted"]
+    assert _record_cols(t._head()[1]) == cols
+    t.merge_batch(_mk_rows(spark, [(1, "a", 100, False), (2, "b", 101, True)]), 2)
+    assert _record_cols(t._head()[1]) == cols  # no pb partition column
+    t.compact(target_partitions=2)
+    seq, head = t._head()
+    assert _record_cols(head) == cols
+    t._commit("v99", dict(head["buckets"]), expect_parent=seq)
+    assert t._head()[1]["schema"] == head["schema"]
+    assert [r["id"] for r in t.read().collect()] == [1]
+
+    bare = ParquetUpsertTable(spark, str(tmp_path / "bare"), key="id")
+    bare._commit("v1", {"0": "v1/pb=0"}, expect_parent=0)
+    for op in (bare.read, lambda: bare.read_keys([1]),
+               lambda: bare.merge_batch(_mk_rows(spark, [(1, "a", 1, False)]), 2)):
+        with pytest.raises(ValueError, match=re.escape(bare.table_dir)):
+            op()
+
+
 def test_spool_identity_guards_cross_incarnation_blend(spark, tmp_path):
     """r17 review pass: staged spool batches OUTLIVE a wiped checkpoint,
     and the commit-layer identity guard cannot see them (rows from two
