@@ -61,10 +61,12 @@ Tombstones persist until major compaction (Delta-style retention window).
 
 Exactly-once: foreachBatch may replay a batch after failure; the merge is
 idempotent (latest-SCN-wins is a deterministic function of {current state ∪
-batch}), and the version label is keyed by batch id, so a replay rewrites
-the same data paths and appends a new commit record with the same label
-and identical content — together with the checkpoint offset log this gives
-the reference's effective exactly-once contract (R15).
+batch}), and the version label is keyed by batch id. A replay of a batch
+whose commit landed finds a retained record committing its label and is a
+no-op; a replay whose earlier attempt died before its commit rewrites the
+same data paths and appends the record — together with the checkpoint
+offset log this gives the reference's effective exactly-once contract
+(R15).
 """
 
 from __future__ import annotations
@@ -73,7 +75,8 @@ import json
 import os
 import re
 import warnings
-from collections.abc import Callable, Iterable
+from collections.abc import Callable, Iterable, Iterator
+from decimal import Decimal
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -82,7 +85,6 @@ from pyspark.sql.types import LongType, StructField, StructType
 
 from olr_cdc_oracle_with_dbz_spark.cdc.envelope import (
     PK,
-    compact_latest,
     compact_latest_clustered,
     unwrap,
 )
@@ -186,6 +188,16 @@ _PB = "pb"  # bucket partition column
 _INT64 = range(-(1 << 63), 1 << 63)
 
 
+def _key_lit(v):
+    """``F.lit`` of a lookup value. ``F.lit`` of an ``int`` outside int64
+    raises in the JVM, so such an int goes in as a ``Decimal`` (as its
+    digits past Spark's 38-digit decimals) and Spark's own cast decides
+    what it means against the key type."""
+    if isinstance(v, int) and v not in _INT64:
+        return F.lit(Decimal(v) if abs(v) < 10**38 else str(v))
+    return F.lit(v)
+
+
 def _driver_buckets(
     values: list, key_type, n_buckets: int
 ) -> list[tuple[object, int]] | None:
@@ -283,28 +295,29 @@ class ParquetUpsertTable:
         grace exists to close cannot occur there).
 
         ``stream_id``: identity of the writing stream/checkpoint, stamped
-        into every commit record (r15 ADVICE). The replay short-circuit
-        keys on the head's version label equalling ``v{batch_id}``; with
-        no identity, reprocessing a source from a FRESH checkpoint
-        against an existing table dir silently no-ops the one batch
-        whose id collides with the head — silent data loss. With an
-        identity, a label collision from a DIFFERENT stream raises
-        instead. Use the Structured Streaming ``query.id`` (stable
-        across restarts from the same checkpoint) or the checkpoint
-        path; :func:`start_sink` auto-derives the latter when
-        the handle has none. Same posture as Delta's ``txnAppId``
+        into every commit record and spool marker (r15 ADVICE). A merge
+        whose label ``v{batch_id}`` a retained record already commits is
+        a replay and returns without writing; with no identity,
+        reprocessing a source from a FRESH checkpoint against an
+        existing table dir silently no-ops every batch whose id collides
+        with a committed label — silent data loss. With an identity, a
+        label collision from a DIFFERENT stream raises instead. Use the
+        Structured Streaming ``query.id`` (stable across restarts from
+        the same checkpoint) or the checkpoint path; :func:`start_sink`
+        (and so every ``run_pipeline`` shape) auto-derives the latter
+        when the handle has none. Same posture as Delta's ``txnAppId``
         idempotent-write key. None preserves the label-only check (and
         records with no stored id — pre-r16 tables — never raise).
 
-        ``strict_identity`` (r16 ADVICE): a None-id handle whose label
-        collision lands on a record that DOES carry a ``stream_id``
-        normally warns and keeps the legacy silent-replay no-op — the
-        record's presence proves the table opted into identity checking,
-        so an ad-hoc batch writer or pre-r16 caller reprocessing into a
-        protected table re-opens the silent-data-loss hole the feature
-        closes. ``strict_identity=True`` upgrades that warning to a
-        raise; it has no effect on handles that carry an id (those
-        already raise on cross-stream collisions).
+        ``strict_identity`` (r16 ADVICE): a None-id handle that meets a
+        record or spool marker that DOES carry a ``stream_id`` normally
+        warns and proceeds (replay no-op, or spool merge) — the stamp
+        proves the table opted into identity checking, so an ad-hoc
+        batch writer reprocessing into a protected table re-opens the
+        silent-data-loss hole the feature closes. ``strict_identity=True``
+        upgrades that warning to a raise (:meth:`_check_identity`); it
+        has no effect on handles that carry an id (those already raise
+        on cross-stream collisions).
         """
         self.spark = spark
         self.table_dir = table_dir
@@ -330,7 +343,7 @@ class ParquetUpsertTable:
         self.fs.mkdirs(table_dir)
         _seq, m = self._head()
         if m is not None:
-            committed = m.get("n_buckets", self.DEFAULT_BUCKETS)
+            committed = m["n_buckets"]
             if n_buckets is not None and n_buckets != committed:
                 raise ValueError(
                     f"{table_dir} is committed with n_buckets={committed}, "
@@ -452,11 +465,15 @@ class ParquetUpsertTable:
         unknown. That's the conservative posture Delta's log takes with
         zombie commit files; recovery is deleting the torn record.
         """
+        return next(self._readable(), (0, None))
+
+    def _readable(self) -> Iterator[tuple[int, dict]]:
+        """(sequence, record) of every readable retained record, newest
+        first, read lazily — a caller that stops early reads no more."""
         for seq in reversed(self._commit_seqs()):
             m = self._record(seq)
             if m is not None:
-                return seq, m
-        return 0, None
+                yield seq, m
 
     def current_version(self) -> str | None:
         """Label of the live version (e.g. ``v...042``), or None."""
@@ -464,21 +481,33 @@ class ParquetUpsertTable:
         return m.get("version") if m else None
 
     def _manifest(self, version: str | None = None) -> dict | None:
-        """Head manifest, or time-travel to a retained version LABEL (the
-        newest record carrying that label wins — a replay whose earlier
-        attempt wrote data but died BEFORE its commit landed re-writes
-        and appends under the same label; a replay of a DURABLE commit
-        short-circuits in merge_batch and appends nothing)."""
-        seq, m = self._head()
-        if version is None or (m and m.get("version") == version):
-            return m
-        for s in reversed(self._commit_seqs()):
-            if s >= seq:
-                continue
-            r = self._record(s)
-            if r is not None and r.get("version") == version:
-                return r
+        """The head record, or the newest retained record that commits
+        version LABEL ``version`` — time travel, and the one answer to
+        "is this label committed". A replay whose earlier attempt wrote
+        data but died BEFORE its commit landed re-writes and appends
+        under the same label; a replay of a DURABLE commit is a no-op in
+        merge_batch and appends nothing."""
+        for _seq, m in self._readable():
+            if version is None or m["version"] == version:
+                return m
         return None
+
+    def _referenced_dirs(
+        self, records: Iterable[dict | None] | None = None
+    ) -> set[str]:
+        """Top-level version dirs that readable retained records
+        reference — every record's, not just the head's: merges carry
+        untouched buckets' labels forward, so a dir outlives its own
+        commit record. ``records`` (None entries skipped) saves a caller
+        that already read the log a second pass."""
+        if records is None:
+            records = (m for _seq, m in self._readable())
+        return {
+            rel.split("/", 1)[0]
+            for m in records
+            if m is not None
+            for rel in m["buckets"].values()
+        }
 
     def _commit(
         self,
@@ -510,9 +539,9 @@ class ParquetUpsertTable:
         that path is taken (fs.py, ADVICE r13). Replays are
         unaffected: a replay whose earlier attempt died BEFORE its
         commit landed re-derives from the live head and appends a fresh
-        record; a replay of a commit that DID land short-circuits in
-        merge_batch before any write (r15 — re-writing would overwrite
-        the head-referenced version dir).
+        record; a replay of a commit that DID land is a no-op in
+        merge_batch, before any write (r15 — re-writing would overwrite
+        a referenced version dir).
 
         Auto-retention (r14): every ``retain_commits``-th successful
         commit vacuums the log down to the newest ``retain_commits``
@@ -547,21 +576,19 @@ class ParquetUpsertTable:
         seq = expect_parent + 1
         if parent_manifest is None and expect_parent > 0:
             parent_manifest = self._record(expect_parent)  # best-effort
-        parent_space = None
-        if parent_manifest is not None:
-            parent_space = parent_manifest.get(
-                "max_label"
-            ) or parent_manifest.get("version")
-        if parent_space is not None and version <= parent_space:
-            dup = self._committed_by(version)
-            if dup is not None:
-                raise RuntimeError(
-                    f"duplicate-label commit refused on {self.table_dir}: "
-                    f"a retained record already commits {version} — "
-                    f"appending another would make manifest/time-travel "
-                    f"resolution ambiguous. Point the writer at a new "
-                    f"table dir, or compact() then vacuum(keep=1) first"
-                )
+        parent_space = parent_manifest["max_label"] if parent_manifest else None
+        if (
+            parent_space is not None
+            and version <= parent_space
+            and self._manifest(version) is not None
+        ):
+            raise RuntimeError(
+                f"duplicate-label commit refused on {self.table_dir}: "
+                f"a retained record already commits {version} — "
+                f"appending another would make manifest/time-travel "
+                f"resolution ambiguous. Point the writer at a new "
+                f"table dir, or compact() then vacuum(keep=1) first"
+            )
         # Vacated-slot fence (ADVICE r14): retention vacates old sequence
         # slots, so create_exclusive alone no longer proves this writer is
         # the head's successor — a slot can be winnable because a vacuum
@@ -593,9 +620,7 @@ class ParquetUpsertTable:
         rec = {
             "version": version,
             "max_label": (
-                version
-                if parent_space is None
-                else max(version, parent_space)
+                version if parent_space is None else max(version, parent_space)
             ),
             "n_buckets": self.n_buckets if n_buckets is None else n_buckets,
             "buckets": buckets,
@@ -743,7 +768,7 @@ class ParquetUpsertTable:
         # pmod against the bucket count the MANIFEST records, not the
         # constructor default — a table written with a non-default count
         # must prune against the layout it was written with (ADVICE r11)
-        n_buckets = m.get("n_buckets", self.n_buckets)
+        n_buckets = m["n_buckets"]
         # xxhash64 is TYPE-sensitive (an int literal hashes differently
         # from the same value in a long column), so lookups hash and
         # compare as the STORED key type
@@ -761,7 +786,7 @@ class ParquetUpsertTable:
         # raw Python values can compare differently than they hash (e.g.
         # int lookups against a string key column), so pruning and
         # filtering must agree on the comparison type (ADVICE r11)
-        cast_lits = [F.lit(v).cast(key_type) for v, _b in keyed]
+        cast_lits = [_key_lit(v).cast(key_type) for v, _b in keyed]
         return self._scan(m, rels).filter(F.col(self.key).isin(*cast_lits))
 
     def _probe_buckets(
@@ -773,13 +798,14 @@ class ParquetUpsertTable:
         Spark's comparison coercion. A LOSSY cast — e.g. 3.9 against a
         bigint key — must mean "no such key", not a silent match of key
         3; NULL-producing casts and None lookups drop the same way."""
-        cast_lits = [F.lit(v).cast(key_type) for v in values]
+        lits = [_key_lit(v) for v in values]
+        cast_lits = [lit.cast(key_type) for lit in lits]
         probe = [
             F.struct(
                 F.pmod(F.xxhash64(c), F.lit(n_buckets)).alias("b"),
-                F.coalesce(F.lit(v) == c, F.lit(False)).alias("ok"),
+                F.coalesce(lit == c, F.lit(False)).alias("ok"),
             )
-            for v, c in zip(values, cast_lits)
+            for lit, c in zip(lits, cast_lits)
         ]
         rows = (
             self.spark.range(1)  # 1 row, 1 partition: explode keeps order
@@ -794,12 +820,10 @@ class ParquetUpsertTable:
         replay whose earlier attempt's commit never landed can append a
         second record under the same label, so labels are deduplicated —
         one logical version per label."""
-        seen: dict[str, None] = {}  # insertion-ordered set
-        for s in self._commit_seqs():
-            r = self._record(s)
-            if r is not None:
-                seen.setdefault(r["version"], None)
-        return list(seen)
+        records = map(self._record, self._commit_seqs())
+        return list(
+            dict.fromkeys(r["version"] for r in records if r is not None)
+        )
 
     def vacuum(self, keep: int = 2) -> list[str]:
         """Drop all but the newest ``keep`` commit records — NEVER the
@@ -876,27 +900,13 @@ class ParquetUpsertTable:
             # again, and the only thing standing between a stale writer
             # and a silent lost update is the floor being visible first
             self._raise_floor(max(s for s, _r in to_drop))
-        dropped: list[str] = []
-        dropped_dirs: set[str] = set()
-        for s, r in to_drop:
-            dropped.append(r["version"])
-            for rel in r["buckets"].values():
-                dropped_dirs.add(rel.split("/", 1)[0])
+        dropped_dirs = self._referenced_dirs(r for _s, r in to_drop)
+        for s, _r in to_drop:
             self.fs.delete(self._commit_path(s))
-        referenced = set()
-        for s in self._commit_seqs():
-            r = self._record(s)
-            if r is None:
-                continue
-            for rel in r["buckets"].values():
-                referenced.add(rel.split("/", 1)[0])
-        for d in sorted(dropped_dirs - referenced):
+        for d in sorted(dropped_dirs - self._referenced_dirs()):
             self.fs.delete(os.path.join(self.table_dir, d))
         # dedupe labels (replay records share one) preserving order
-        out: dict[str, None] = {}
-        for v in dropped:
-            out.setdefault(v, None)
-        return list(out)
+        return list(dict.fromkeys(r["version"] for _s, r in to_drop))
 
     def _age_mtime(self, path: str, depth: int = 4) -> float:
         """Freshest modification time over ``path`` and its descendants
@@ -969,12 +979,7 @@ class ParquetUpsertTable:
         records: dict[int, dict | None] = {
             s: self._record(s) for s in self._commit_seqs()
         }
-        referenced = set()
-        for r in records.values():
-            if r is None:
-                continue
-            for rel in r["buckets"].values():
-                referenced.add(rel.split("/", 1)[0])
+        referenced = self._referenced_dirs(records.values())
         cutoff = time.time() - older_than_sec
         dropped = []
         for d in self.fs.list_names(self.table_dir):
@@ -1038,79 +1043,63 @@ class ParquetUpsertTable:
             and cls._canon_id(mine) != cls._canon_id(theirs)
         )
 
-    def _unverifiable_replay(self, theirs: str | None, label: str) -> None:
-        """r16 ADVICE #3: a None-id handle whose label collision lands on
-        a record that DOES carry a ``stream_id``. The record's presence
-        proves the table opted into identity checking, so treating the
-        collision as a same-stream replay is an UNVERIFIED assumption —
-        an ad-hoc batch writer or pre-r16 caller reprocessing into a
-        protected table re-opens the silent-drop hole the identity check
-        closes. Warn by default (the legacy no-op stays available for
-        deliberate ad-hoc use); raise under ``strict_identity``. No-op
-        when the handle has an id (cross-stream already raises) or the
-        record predates identity stamping (nothing to verify against).
+    def _check_identity(self, theirs: str | None, label: str | None) -> None:
+        """The one stream-identity verdict, on the record that commits
+        the colliding ``label`` (the merge's replay path) or, with
+        ``label`` None, on the spool's ``_stream_id`` marker. ``theirs``
+        is the identity stamped there (None: nothing stamped).
+
+        * A DIFFERENT stream raises: a fresh checkpoint reusing the
+          batch-id space, whose batch a replay no-op would drop, or
+          another incarnation's staged rows, which a flush would blend
+          into this stream's batch.
+        * A None-id handle over a stamped record or marker warns, and
+          raises under ``strict_identity`` (r16 ADVICE #3): the stamp
+          proves the table opted into identity checking, so calling the
+          collision same-stream is an unverified assumption.
         """
-        if self.stream_id is not None or theirs is None:
-            return
-        msg = (
-            f"unverifiable replay on {self.table_dir}: commit {label} "
-            f"carries stream identity {theirs!r} but this handle has "
-            f"none, so treating the colliding batch as a replay no-op "
-            f"cannot be verified. If this is the same stream, pass its "
-            f"stream_id (or drive it through materialize_stream); if it "
-            f"is a fresh reprocess, point it at a new table dir or "
-            f"compact() then vacuum(keep=1) first."
-        )
+        if label is None:
+            subject, kind = "the spool", "spool"
+            collision = "spool identity collision"
+            act = "merging its staged micro-batches into this stream's batch"
+            remedy = (
+                f"Clear the stale spool ({self._spool_dir()}) if those "
+                f"rows are superseded, or point this stream at a new "
+                f"table dir."
+            )
+        else:
+            subject, kind = f"commit {label}", "replay"
+            collision = "batch-id collision"
+            act = "treating this batch as a replay no-op"
+            remedy = (
+                "Point a fresh reprocess at a new table dir, or compact() "
+                "then vacuum(keep=1) first (re-roots every bucket under a "
+                "fresh label and retires the old records)."
+            )
+        if self._other_stream(self.stream_id, theirs):
+            raise RuntimeError(
+                f"{collision} on {self.table_dir}: {subject} carries stream "
+                f"identity {theirs!r} but this handle is stream "
+                f"{self.stream_id!r}, so {act} would silently drop or "
+                f"blend rows. {remedy}" + _IDENTITY_CAVEAT
+            )
+        if theirs is not None and self.stream_id is None:
+            self._unverifiable(
+                f"unverifiable {kind} on {self.table_dir}: {subject} "
+                f"carries stream identity {theirs!r} but this handle has "
+                f"none, so {act} cannot be verified as same-stream. If "
+                f"this is the same stream, pass its stream_id (start_sink, "
+                f"which run_pipeline uses, stamps it). {remedy}",
+                # the frame that called merge_batch / spool_batch / flush_spool
+                stacklevel=4 if label else 5,
+            )
+
+    def _unverifiable(self, msg: str, stacklevel: int) -> None:
+        """An identity mix that cannot be verified as same-stream: warn,
+        or raise under ``strict_identity``."""
         if self.strict_identity:
             raise RuntimeError(msg)
-        warnings.warn(msg, RuntimeWarning, stacklevel=3)
-
-    def _committed_by(self, label: str) -> dict | None:
-        """The newest retained commit record whose version is ``label``,
-        or None. A non-None result means the label's version dir holds
-        COMMITTED rows already folded into the head lineage."""
-        for s in reversed(self._commit_seqs()):
-            r = self._record(s)
-            if r is not None and r.get("version") == label:
-                return r
-        return None
-
-    def _label_conflict(self, label: str) -> tuple[dict | None, str | None]:
-        """Why an existing ``table_dir/<label>`` dir must not be blindly
-        overwritten: ``(committing record or None, referenced-reason or
-        None)`` in ONE pass over the retained log. Both None means a
-        safe orphan — a dead writer's data whose commit never landed,
-        where re-running the write IS the idempotent retry.
-
-        A version dir stays live long after its own commit record is
-        gone: merges carry untouched buckets' labels forward, so any
-        RETAINED record's bucket map (the head's included) can reference
-        a dir whose own commit the vacuum already dropped. Overwriting
-        one loses committed rows (the r16 review's
-        fresh-stream-at-batch-0 scenario: head at v5 whose map still
-        references v0/pb=k — the head-label collision check alone never
-        fires, but the overwrite of v0 destroys live data). The head is
-        the newest readable record, so the scan covers it too. Only
-        consulted when the output dir already exists, so the healthy
-        merge path pays nothing; the record scan is bounded by vacuum
-        retention.
-        """
-        owner: dict | None = None
-        ref: str | None = None
-        for s in reversed(self._commit_seqs()):
-            r = self._record(s)
-            if r is None:
-                continue
-            if owner is None and r.get("version") == label:
-                owner = r
-            if ref is None and any(
-                rel.startswith(f"{label}/")
-                for rel in r.get("buckets", {}).values()
-            ):
-                ref = f"commit record {s}'s bucket map references it"
-            if owner is not None and ref is not None:
-                break
-        return owner, ref
+        warnings.warn(msg, RuntimeWarning, stacklevel=stacklevel)
 
     # -- write side --------------------------------------------------------
     def _bucket_col(self, n_buckets: int | None = None):
@@ -1125,122 +1114,79 @@ class ParquetUpsertTable:
 
         Replay idempotence: ``label`` is keyed by ``batch_id``, so a
         foreachBatch replay of a batch whose ``_commit`` ALREADY landed
-        (crash between the commit and the checkpoint offset commit) finds
-        the head carrying its own label and returns without writing —
-        re-running the write would ``overwrite`` the very version dir the
-        head references and the merge reads from (Spark's
-        read/overwrite-conflict guard does not fire because the read
-        roots are the ``pb=`` subdirs while the overwrite target is their
-        parent). The short-circuit is Delta's foreachBatch txn-version
-        dedup posture. Consequence: a table's batch-id space must be
-        monotonic — reprocessing a source from a FRESH checkpoint against
-        an existing table dir reuses old labels; point it at a new table
-        dir (or ``compact()`` first, which relabels the head) instead.
-        When both the handle and the head record carry a ``stream_id``
-        (r15 ADVICE), that consequence is ENFORCED rather than silent: a
-        label collision from a different stream raises instead of
-        no-op'ing the colliding batch away. Records or handles without an
-        id keep the label-only check (pre-r16 tables, ad-hoc batch use) —
-        but a None-id HANDLE colliding against an id-STAMPED record warns
-        (raises under ``strict_identity``), since the record proves the
-        table opted into identity checking and the silent no-op would
-        re-open the hole for ad-hoc writers (r16 ADVICE #3).
+        finds a retained record committing its label — the head (crash
+        between the commit and the checkpoint offset commit) or one below
+        it (a later merge or compact folded its rows in) — and returns
+        without writing or running a Spark job. Re-running the write
+        would ``overwrite`` a version dir that records reference and the
+        merge reads from (Spark's read/overwrite-conflict guard does not
+        fire because the read roots are the ``pb=`` subdirs while the
+        overwrite target is their parent). This is Delta's foreachBatch
+        txn-version dedup posture. Consequence: a table's batch-id space
+        must be monotonic — reprocessing a source from a FRESH checkpoint
+        against an existing table dir reuses old labels; point it at a
+        new table dir (or ``compact()`` first, which relabels the head)
+        instead. :meth:`_check_identity` enforces that consequence before
+        the no-op: a label collision from a different ``stream_id``
+        raises, and a None-id handle colliding with an id-stamped record
+        warns (raises under ``strict_identity``). Records or handles
+        without an id keep the label-only check (ad-hoc batch use).
         """
         label = f"v{batch_id:020d}"
         parent_seq, manifest = self._head()  # fence token for _commit
-        if manifest is not None and manifest.get("version") == label:
-            if self._other_stream(self.stream_id, manifest.get("stream_id")):
-                raise RuntimeError(
-                    f"batch-id collision on {self.table_dir}: head commit "
-                    f"{label} was written by stream "
-                    f"{manifest.get('stream_id')!r} but this handle is "
-                    f"stream {self.stream_id!r} — a fresh checkpoint is "
-                    f"reprocessing into an existing table dir, and "
-                    f"treating this as a replay would silently drop the "
-                    f"batch. Point the new stream at a new table dir, or "
-                    f"compact() then vacuum(keep=1) first (re-roots every "
-                    f"bucket under a fresh label and retires the old "
-                    f"records)." + _IDENTITY_CAVEAT
-                )
-            self._unverifiable_replay(manifest.get("stream_id"), label)
-            return  # this batch's commit is already durable: replay no-op
         out = os.path.join(self.table_dir, label)
         # label-space high-water mark, NOT the head's own version: after a
         # sanctioned backwards reuse (the post-runbook wiped-checkpoint
         # path) the head label drops below retained labels, and gating on
         # it alone would re-open the dir-less-collision hole one level up
-        head_space = None
-        if manifest is not None:
-            head_space = manifest.get("max_label") or manifest.get("version")
+        head_space = manifest["max_label"] if manifest else None
         if self.fs.exists(out) or (
             head_space is not None and label <= head_space
         ):
-            # collision scan, checked BEFORE any Spark job runs over the
-            # batch (r16 review; the healthy new-batch path — label above
-            # head, no dir — pays only the exists probe it always paid).
-            # Consulted when the version dir exists, OR (r16 ADVICE #1)
-            # when it is absent but the label sits at-or-below the head:
-            # a retained commit record can outlive its dir (an empty
-            # micro-batch's label dir is referenced by no bucket map, so
-            # vacuum removes the dir while the record survives) — gating
-            # purely on fs.exists would let a fresh checkpoint colliding
-            # on that batch id skip the owner scan and append a
-            # DUPLICATE-label record, making _manifest(label) resolution
-            # ambiguous. Fixed-width labels (v%020d, optional 'c'
-            # suffixes) compare numerically under string order, so
-            # label <= head max_label is exactly "inside the committed
-            # batch-id space". Three cases: (1) the label is COMMITTED by
-            # a retained record — same stream means a replay of a batch
-            # whose rows a later compact/merge already folded into the
-            # head lineage (no-op, same posture as the head-label
-            # short-circuit), a different stream means a fresh checkpoint
-            # reusing the batch-id space (raise); (2) uncommitted but
-            # some retained record's bucket map still references it —
-            # writing under that label corrupts committed reads whether
-            # or not the dir survives (raise); (3) a true orphan from a
-            # writer that died before its commit landed — overwrite IS
-            # the idempotent retry (and a vacuumed same-stream label
-            # with no surviving record or reference re-merges
-            # idempotently: stored rows keep their _scn, so replayed
-            # older events can never overwrite newer state).
-            owner, ref = self._label_conflict(label)
+            # The collision scan runs BEFORE any Spark job over the batch
+            # (r16 review); the healthy new-batch path — label above the
+            # high-water mark, no dir — pays only the exists probe. It
+            # also runs when the dir is absent but the label sits inside
+            # the committed batch-id space (r16 ADVICE #1): a retained
+            # record can outlive its dir (an empty micro-batch's dir is in
+            # no bucket map, so vacuum removes it while the record
+            # survives), and gating on fs.exists alone would let a
+            # colliding fresh checkpoint append a DUPLICATE-label record.
+            # Fixed-width labels (v%020d, optional 'c' suffixes) compare
+            # numerically under string order. Three cases: (1) a retained
+            # record, the head included, commits the label — a replay of
+            # a durable batch: no-op once the identity verdict passes;
+            # (2) no record commits it but a bucket map still references
+            # it — writing under it corrupts committed reads (raise);
+            # (3) a true orphan from a writer that died before its commit
+            # landed — overwrite IS the idempotent retry (stored rows keep
+            # their _scn, so replayed older events never overwrite newer
+            # state).
+            owner = self._manifest(label)
             if owner is not None:
-                if self._other_stream(self.stream_id, owner.get("stream_id")):
-                    raise RuntimeError(
-                        f"batch-id collision on {self.table_dir}: "
-                        f"{label} was committed by stream "
-                        f"{owner.get('stream_id')!r} but this handle is "
-                        f"stream {self.stream_id!r} — a fresh checkpoint "
-                        f"is reprocessing into an existing table dir. "
-                        f"Point the new stream at a new table dir, or "
-                        f"compact() then vacuum(keep=1) first (re-roots "
-                        f"every bucket under a fresh label and retires "
-                        f"the old records)." + _IDENTITY_CAVEAT
-                    )
-                self._unverifiable_replay(owner.get("stream_id"), label)
-                return  # committed replay below head: rows already live
-            if ref is not None:
+                self._check_identity(owner.get("stream_id"), label)
+                return  # this batch's commit is already durable: no-op
+            if label in self._referenced_dirs():
                 raise RuntimeError(
                     f"version-dir collision on {self.table_dir}: writing "
-                    f"batch {batch_id} would overwrite {label}, but "
-                    f"{ref} — a fresh checkpoint is reusing an existing "
+                    f"batch {batch_id} would overwrite {label}, but a "
+                    f"retained commit record's bucket map references it "
+                    f"— a fresh checkpoint is reusing an existing "
                     f"table's batch-id space. Point the new stream at a "
                     f"new table dir, or compact() then vacuum(keep=1) "
                     f"first (re-roots every bucket under a fresh label "
                     f"and retires the old records)"
                 )
         if manifest is not None:
-            committed = manifest.get("n_buckets", self.n_buckets)
-            if committed != self.n_buckets:
-                # ADVICE r12: this handle predates a compact(n_buckets=...)
-                # re-bucket by another handle — hashing with the stale count
-                # would stamp a mixed-layout manifest (missed lookups,
-                # duplicated keys on later merges). Adopt the committed
-                # layout: everything below derives from self.n_buckets, so
-                # adoption keeps hash, pruning, and the committed record
-                # consistent — and a long-lived foreachBatch handle keeps
-                # working across a maintenance re-bucket.
-                self.n_buckets = committed
+            # ADVICE r12: this handle may predate a compact(n_buckets=...)
+            # re-bucket by another handle — hashing with the stale count
+            # would stamp a mixed-layout manifest (missed lookups,
+            # duplicated keys on later merges). Adopt the committed
+            # layout: everything below derives from self.n_buckets, so
+            # adoption keeps hash, pruning, and the committed record
+            # consistent — and a long-lived foreachBatch handle keeps
+            # working across a maintenance re-bucket.
+            self.n_buckets = manifest["n_buckets"]
         buckets = dict(manifest["buckets"]) if manifest else {}
         # the committed schema (raises on a record that lacks one before
         # any job runs); the read-back below uses it, so no read infers
@@ -1392,42 +1338,39 @@ class ParquetUpsertTable:
     def _check_spool_identity(
         self, claim: bool, zero_event_delete: bool = False
     ) -> str | None:
-        """The spool-layer twin of the commit-record replay identity (r17
-        review pass): staged batches OUTLIVE a wiped checkpoint, so a
-        fresh incarnation's threshold flush would otherwise merge a
-        previous incarnation's staged rows into its own batch — the same
-        cross-stream blend the commit guard closes, one layer down (the
-        commit guard can't see it: rows from both incarnations arrive in
-        ONE merge under the new stream's batch id). The first id-carrying
-        staging writes a ``_stream_id`` marker beside the staged dirs
-        (``claim=True``); every later staging or flush compares it with
-        :meth:`_canon_id` semantics and raises on a different stream —
-        clear the stale spool (``fs.delete(<table>/_spool)``) or point
-        the new stream at a new table dir. The marker is deleted with
-        the spool dir on every flush, so each coalescing window
-        re-claims it. Returns the marker's value (None if absent).
+        """The spool's stream identity (r17 review pass): staged batches
+        OUTLIVE a wiped checkpoint, so a fresh incarnation's threshold
+        flush would otherwise merge a previous incarnation's staged rows
+        into its own batch — the same cross-stream blend the commit guard
+        closes, one layer down (the commit guard can't see it: rows from
+        both incarnations arrive in ONE merge under the new stream's
+        batch id). The first id-carrying staging writes a ``_stream_id``
+        marker beside the staged dirs (``claim=True``); every later
+        staging or flush hands it to :meth:`_check_identity`, the verdict
+        the merge's replay path gives a commit record: a foreign stream
+        raises (clear the stale spool or point the new stream at a new
+        table dir), and a None-id handle over an id-MARKED spool warns
+        (raises under ``strict_identity``) — merging (or, on the
+        zero-event path, deleting) another stream's claim cannot be
+        verified as same-stream. The marker is deleted with the spool
+        dir on every flush, so each coalescing window re-claims it.
+        Returns the marker's value (None if absent).
 
-        Both UNVERIFIABLE mixes are loud (warn; raise under
-        ``strict_identity``), mirroring the commit side:
-
-        * a None-id handle over an id-MARKED spool — merging (or, on the
-          zero-event path, deleting) another stream's claim cannot be
-          verified as same-stream;
-        * an id-carrying handle over a MARKER-LESS spool that already
-          holds staged batch dirs (r17 ADVICE #3 / r18 order #7): those
-          dirs were written before identity stamping or by an id-less
-          incarnation, so adopting them merges unverified rows into this
-          stream's batch under this stream's batch id. Pre-r17 legacy
-          spools adopt-with-a-warning rather than silently; the warning
-          fires exactly once per spool (staging immediately claims the
-          marker, so later touches compare equal). An id-carrying handle
-          claiming an EMPTY marker-less spool (the normal first staging
-          of a coalescing window) stays silent — as does the zero-event
-          DELETE path (``zero_event_delete=True``, r18 ADVICE #3): there
-          the marker-less dirs are provably zero-row and about to be
-          deleted, not merged, so no unverified rows can enter any batch
-          and the adoption warning's merge language would misdescribe
-          the action.
+        One mix only the spool has is loud the same way: an id-carrying
+        handle over a MARKER-LESS spool that already holds staged batch
+        dirs (r17 ADVICE #3 / r18 order #7). Those dirs were written
+        before identity stamping or by an id-less incarnation, so
+        adopting them merges unverified rows into this stream's batch
+        under this stream's batch id. Pre-r17 legacy spools
+        adopt-with-a-warning rather than silently; the warning fires
+        exactly once per spool (staging immediately claims the marker,
+        so later touches compare equal). An id-carrying handle claiming
+        an EMPTY marker-less spool (the normal first staging of a
+        coalescing window) stays silent — as does the zero-event DELETE
+        path (``zero_event_delete=True``, r18 ADVICE #3): there the
+        marker-less dirs are provably zero-row and about to be deleted,
+        not merged, so no unverified rows can enter any batch and the
+        adoption warning's merge language would misdescribe the action.
         """
         root = self._spool_dir()
         marker = os.path.join(root, self._SPOOL_ID)
@@ -1443,28 +1386,7 @@ class ParquetUpsertTable:
                 # no marker. The commit log's _record tolerates the
                 # identical listing-vs-vacuum race (ADVICE r13).
                 theirs = None
-        if self._other_stream(self.stream_id, theirs):
-            raise RuntimeError(
-                f"spool identity collision on {self.table_dir}: staged "
-                f"micro-batches were written by stream {theirs!r} but "
-                f"this handle is stream {self.stream_id!r} — flushing "
-                f"would merge another incarnation's staged rows into "
-                f"this stream's batch. Clear the stale spool "
-                f"({self._spool_dir()}) if those rows are superseded, or "
-                f"point this stream at a new table dir." + _IDENTITY_CAVEAT
-            )
-        if theirs is not None and self.stream_id is None:
-            msg = (
-                f"unverifiable spool on {self.table_dir}: staged "
-                f"micro-batches carry stream identity {theirs!r} but "
-                f"this handle has none, so merging them cannot be "
-                f"verified as same-stream. Pass that stream_id (or drive "
-                f"the flush through materialize_stream), or clear "
-                f"{self._spool_dir()} if the rows are superseded."
-            )
-            if self.strict_identity:
-                raise RuntimeError(msg)
-            warnings.warn(msg, RuntimeWarning, stacklevel=3)
+        self._check_identity(theirs, None)
         if theirs is None and self.stream_id is not None:
             legacy = [
                 d
@@ -1479,7 +1401,7 @@ class ParquetUpsertTable:
             # data to protect, so the unverifiable-adoption posture does
             # not apply here.
             if legacy and not zero_event_delete:
-                msg = (
+                self._unverifiable(
                     f"unverifiable spool adoption on {self.table_dir}: "
                     f"{len(legacy)} staged micro-batch dir(s) carry no "
                     f"stream identity (written before identity stamping, "
@@ -1488,19 +1410,13 @@ class ParquetUpsertTable:
                     f"stream's batch cannot be verified as same-stream. "
                     f"Clear {self._spool_dir()} if the rows are "
                     f"superseded, or flush them with an id-less handle "
-                    f"first."
+                    f"first.",
+                    stacklevel=4,
                 )
-                if self.strict_identity:
-                    raise RuntimeError(msg)
-                warnings.warn(msg, RuntimeWarning, stacklevel=3)
             if claim:
                 self.fs.mkdirs(root)
                 self.fs.write_text_atomic(marker, self.stream_id)
         return theirs
-
-    def _footer_rows(self, path: str) -> int:
-        """Row count of one staged batch dir from parquet footers (no jobs)."""
-        return self.fs.parquet_rows(path)
 
     def _spool_rows(self) -> dict[str, int]:
         """Per-batch-dir staged row counts: derived ONCE from footers (crash
@@ -1515,7 +1431,7 @@ class ParquetUpsertTable:
             for d in self.fs.list_names(root):
                 p = os.path.join(root, d)
                 if self.fs.is_dir(p):
-                    cache[d] = self._footer_rows(p)
+                    cache[d] = self.fs.parquet_rows(p)  # footers, no job
             self._spool_rows_cache = cache
         return cache
 
@@ -1527,7 +1443,7 @@ class ParquetUpsertTable:
         unwrapped.write.mode("overwrite").parquet(out)
         # keyed by dir name, so a foreachBatch REPLAY (same batch_id,
         # overwritten path) replaces the entry instead of double-counting
-        self._spool_rows()[label] = self._footer_rows(out)
+        self._spool_rows()[label] = self.fs.parquet_rows(out)
 
     def spool_events(self) -> int:
         """Accumulated staged events — incremental counter, zero jobs."""
@@ -1556,11 +1472,10 @@ class ParquetUpsertTable:
             theirs = self._check_spool_identity(
                 claim=False, zero_event_delete=True
             )
-            if theirs is not None and self.stream_id is None:
-                # warned above: do not clear another stream's claim
-                self._spool_rows_cache = {}
-                return False
-            self.fs.delete(root)
+            if theirs is None or self.stream_id is not None:
+                # a None-id handle (warned above) leaves another
+                # stream's claim in place
+                self.fs.delete(root)
             self._spool_rows_cache = {}
             return False
         self._check_spool_identity(claim=False)

@@ -781,7 +781,7 @@ def test_overwrite_of_referenced_version_dir_raises(spark, tmp_path):
     # retained records' bucket maps; overwriting them must still raise,
     # for EITHER stream (the label is now uncommitted-but-live)
     t.vacuum(keep=2)
-    assert t._committed_by(f"v{1:020d}") is None
+    assert t._manifest(f"v{1:020d}") is None
     with pytest.raises(RuntimeError, match="version-dir collision"):
         fresh.merge_batch(_frame(spark, [(9, "z", 900, False)]), 1)
     with pytest.raises(RuntimeError, match="version-dir collision"):
@@ -944,13 +944,13 @@ def test_record_outliving_dir_still_guards_collision(spark, tmp_path):
     t.merge_batch(_frame(spark, [(0, "upd", 200, False)]), 3)
 
     v2 = f"v{2:020d}"
-    assert t._committed_by(v2) is not None
+    assert t._manifest(v2) is not None
     # the reachable real-world path: the sweep reclaims the unreferenced
     # empty-batch dir while its commit record survives retention
     swept = t.vacuum_orphans(older_than_sec=-1.0)
     assert v2 in swept
     assert not fs.exists(os.path.join(tdir, v2))
-    assert t._committed_by(v2) is not None  # record outlives its dir
+    assert t._manifest(v2) is not None  # record outlives its dir
 
     # fresh stream colliding on the dir-less batch id: MUST raise (was:
     # silent duplicate-label commit record)
@@ -972,7 +972,7 @@ def test_record_outliving_dir_still_guards_collision(spark, tmp_path):
     # finds nothing and the merge proceeds — the guard is exactly as
     # durable as the log, by design
     t.vacuum(keep=1)
-    assert t._committed_by(v2) is None
+    assert t._manifest(v2) is None
     fresh.merge_batch(_frame(spark, [(9, "z", 900, False)]), 2)
     assert 9 in {r["id"] for r in fresh.read().collect()}
 
@@ -1140,7 +1140,7 @@ def test_wiped_checkpoint_same_path_end_to_end(spark, tmp_path):
     # finds no owning record but a live reference -> the guard raises
     # THROUGH the stream before anything is overwritten
     t2.vacuum(keep=1)
-    assert t2._committed_by(f"v{0:020d}") is None
+    assert t2._manifest(f"v{0:020d}") is None
     shutil.rmtree(tmp_path / "ckpt")
     t3 = ParquetUpsertTable(spark, tdir, key="id", fs=fs, vacuum_grace_sec=0.0)
     with pytest.raises(Exception, match="collision"):
@@ -1185,8 +1185,8 @@ def test_label_space_high_water_survives_backwards_reuse(spark, tmp_path):
     # label v2 is committed-but-dir-less, head is v3
     t.vacuum_orphans(older_than_sec=-1.0)
     t.vacuum(keep=2)
-    assert t._committed_by(v0) is None
-    assert t._committed_by(v2) is not None
+    assert t._manifest(v0) is None
+    assert t._manifest(v2) is not None
     assert not fs.exists(os.path.join(tdir, v2))
 
     # sanctioned reuse: a fresh stream's batch 0 finds label v0 traceless

@@ -131,14 +131,15 @@ def test_log_invariants_under_random_ops(tmp_path_factory, ops):
             for r in survivors.values()
             for rel in r["buckets"].values()
         }
+        assert t._referenced_dirs() == referenced
         for lab in committed | referenced:
-            owner, ref = t._label_conflict(lab)
+            owner = t._manifest(lab)
             if lab in committed:
                 assert owner is not None and owner["version"] == lab
             else:
-                assert owner is None and ref is not None
+                assert owner is None
         fresh_label = f"v{(max(model) if model else 0) + 1000:020d}"
-        assert t._label_conflict(fresh_label) == (None, None)
+        assert t._manifest(fresh_label) is None
         # r17 (ADVICE r16 #1): the merge gate must consult the scan for
         # every in-use label, INCLUDING labels whose version dir is gone
         # (commit_empty records never had one). Fixed-width labels order

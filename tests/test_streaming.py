@@ -1007,6 +1007,34 @@ def test_read_keys_out_of_range_and_non_finite_mean_no_such_key(spark, tmp_path)
         assert t.read_keys([v]) is None
 
 
+def test_read_keys_int_beyond_int64_on_the_probe_path(spark, tmp_path):
+    """An int outside int64 in a lookup that takes the Spark probe (beside
+    a float on a bigint key, or on a string key) goes in as a decimal
+    literal (its digits past 38 of them), so Spark's own cast decides what
+    it means: no such key on a bigint key, its digits on a string key."""
+    t = ParquetUpsertTable(spark, str(tmp_path / "tbl"), key="id")
+    t.merge_batch(_mk_rows(spark, [(i, f"n{i}", 100 + i, False) for i in range(6)]), 1)
+    assert t.read_keys([1.5, 2**70]) is None
+    assert t.read_keys([1.5, -(10**40)]) is None
+    assert {r["id"] for r in t.read_keys([2**70, 3.0]).collect()} == {3}
+
+    s = ParquetUpsertTable(spark, str(tmp_path / "str_tbl"), key="id")
+    s.merge_batch(
+        spark.createDataFrame(
+            [
+                (str(2**70), "big", 100, False),
+                (str(10**40), "huge", 101, False),
+                ("k", "kay", 102, False),
+            ],
+            "id string, name string, _scn bigint, __deleted boolean",
+        ),
+        1,
+    )
+    assert [r["name"] for r in s.read_keys([2**70]).collect()] == ["big"]
+    got = s.read_keys(["k", 2**70, 10**40]).collect()
+    assert sorted(r["name"] for r in got) == ["big", "huge", "kay"]
+
+
 def _jobs_run(spark, fn) -> int:
     """Spark jobs ``fn`` schedules, counted through a job group. AQE is
     off for the count: it submits every shuffle stage as its own job, so
@@ -1050,6 +1078,74 @@ def test_sink_reads_infer_no_schema_job_count_pins(spark, tmp_path):
     )
     assert _jobs_run(spark, lambda: s.read_keys(["7"]).collect()) == 2
     assert [r["name"] for r in s.read_keys(["7"]).collect()] == ["n7"]
+
+
+def test_replay_of_durable_batch_runs_no_job_at_and_below_head(spark, tmp_path):
+    """A replay of a durable batch takes one path whether its record is
+    the head or sits below it (after a compact): no Spark job and no new
+    record. A foreign stream's replay raises in both positions."""
+    tdir = str(tmp_path / "tbl")
+    t = ParquetUpsertTable(spark, tdir, key="id", n_buckets=4, stream_id="sA")
+    rows = _mk_rows(spark, [(i, f"n{i}", 100 + i, False) for i in range(8)])
+    t.merge_batch(rows, 1)
+    foreign = ParquetUpsertTable(spark, tdir, key="id", stream_id="sB")
+
+    def assert_replay_is_noop():
+        seqs = t._commit_seqs()
+        assert _jobs_run(spark, lambda: t.merge_batch(rows, 1)) == 0
+        assert t._commit_seqs() == seqs
+        with pytest.raises(RuntimeError, match="batch-id collision"):
+            foreign.merge_batch(rows, 1)
+        assert t._commit_seqs() == seqs
+
+    assert t.current_version() == f"v{1:020d}"  # the replayed label is the head
+    assert_replay_is_noop()
+    t.compact(target_partitions=2)
+    assert t.current_version() == f"v{1:020d}c"  # now it sits below the head
+    assert_replay_is_noop()
+    assert sorted(r["id"] for r in t.read().collect()) == list(range(8))
+
+
+def test_healthy_merge_metadata_calls_pinned(spark, tmp_path):
+    """A new-label merge into a populated table makes a fixed set of
+    commit-log calls: a listing and a record read for the head, an exists
+    probe of the version dir, a floor listing before and after the
+    put-if-absent create, and that one create."""
+    from collections import Counter
+
+    from olr_cdc_oracle_with_dbz_spark.fs import LocalFS
+
+    class CountingFS(LocalFS):
+        def __init__(self):
+            super().__init__()
+            self.calls = Counter()
+
+        def list_names(self, path):
+            self.calls["list_names"] += 1
+            return super().list_names(path)
+
+        def read_text(self, path):
+            self.calls["read_text"] += 1
+            return super().read_text(path)
+
+        def exists(self, path):
+            self.calls["exists"] += 1
+            return super().exists(path)
+
+        def create_exclusive(self, path, text):
+            self.calls["create_exclusive"] += 1
+            return super().create_exclusive(path, text)
+
+    fs = CountingFS()
+    t = ParquetUpsertTable(spark, str(tmp_path / "tbl"), key="id", fs=fs)
+    t.merge_batch(_mk_rows(spark, [(i, f"n{i}", 100 + i, False) for i in range(50)]), 1)
+    upd = _mk_rows(spark, [(i, "u", 500 + i, False) for i in range(0, 50, 5)])
+    fs.calls.clear()
+    t.merge_batch(upd, 2)
+    assert fs.calls == Counter(
+        list_names=3, read_text=1, exists=1, create_exclusive=1
+    )
+    assert t.read().count() == 50
 
 
 def test_commit_record_schema_follows_additive_evolution(spark, tmp_path):
