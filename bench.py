@@ -38,13 +38,12 @@ class _CdcSkipped(Exception):
     """Control-flow marker: BENCH_SKIP_CDC=1 bypasses the CDC section."""
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    runs = int(os.environ.get("BENCH_RUNS", "3"))  # BASELINE.md: median of 3 warm runs
-    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
-
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    from olr_cdc_oracle_with_dbz_spark.registry import load_all
+def bench_session(sf_dir: str):
+    """The bench's Spark session over ``sf_dir``, ready for timing: the
+    calibrated local pool and scheduling confs, the layout mirror, the
+    catalog pre-touch and q13b's co-bucketed facts. Shared with
+    scripts/capture_plans.py so captured plans are the ones the bench
+    runs. Returns ``(spark, ingest_sec, bucketed_ingest_sec)``."""
     from olr_cdc_oracle_with_dbz_spark.session import get_spark
 
     # Size the local thread pool to DELIVERED parallelism, not advertised
@@ -77,12 +76,6 @@ def main() -> None:
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
-
-    registry = load_all()
-    names = [n for n, s in sorted(registry.items()) if s.bench]
-    if os.environ.get("BENCH_QUERIES"):  # comma-separated subset for iteration
-        keep = set(os.environ["BENCH_QUERIES"].split(","))
-        names = [n for n in names if n in keep]
 
     # ingest: mirror the testdata through the scan-parallel layout rewrite
     # (sources/layout.py — identical bytes, row groups sized for the core
@@ -122,6 +115,24 @@ def main() -> None:
     except Exception as ex:  # layout failure must not kill the bench
         bucketed_ingest_sec = -1.0
         print(f"# bucketed ingest error: {ex}", file=sys.stderr)
+    return spark, ingest_sec, bucketed_ingest_sec
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    runs = int(os.environ.get("BENCH_RUNS", "3"))  # BASELINE.md: median of 3 warm runs
+    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
+
+    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+    from olr_cdc_oracle_with_dbz_spark.registry import load_all
+
+    spark, ingest_sec, bucketed_ingest_sec = bench_session(sf_dir)
+    registry = load_all()
+    names = [n for n, s in sorted(registry.items()) if s.bench]
+    if os.environ.get("BENCH_QUERIES"):  # comma-separated subset for iteration
+        keep = set(os.environ["BENCH_QUERIES"].split(","))
+        names = [n for n in names if n in keep]
+
     import warnings
 
     from pyspark.sql.functions import pandas_udf

@@ -313,61 +313,15 @@ _L2B_ORACLE = f"""
     """
 
 
-#: Corpus size at which the Arrow shingle kernel overtakes the JVM
-#: expression chain (see trigram_shingle_rows): the kernel pays a fixed
-#: Python-stage hop (~0.1 s locally) and wins ~18 µs/doc after it —
-#: measured 0.35 vs 0.34 s at 5k docs (wash) and 1.50 vs 2.40 s at 50k
-#: docs (1.6×). 20k keeps the small-corpus bench on the lower-latency
-#: JVM path with margin; both paths are test-pinned row-identical.
-_TRI_KERNEL_MIN_DOCS = 20_000
-
-
-def trigram_shingle_rows(d: DataFrame, use_kernel: bool = True) -> DataFrame:
+def trigram_shingle_rows(d: DataFrame) -> DataFrame:
     """(doc_id, lang, sz, shingle) rows — the shared shingle stage of
     l2b/l2e: per-doc DISTINCT word-trigram XXH64 hashes exploded with
-    the per-doc distinct count carried alongside. Two row-identical
-    implementations, switched on measured corpus size by the caller
-    (the l2e two-phase pattern): the vectorized Arrow kernel for big
-    corpora, the JVM expression chain below ``_TRI_KERNEL_MIN_DOCS``
-    where the kernel's fixed Python-stage hop outweighs its per-doc
-    advantage."""
+    the per-doc distinct count carried alongside."""
     # docs with < 3 tokens produce zero shingles (cross-engine contract —
     # see the oracle CTE comment); shingles reduced to 64-bit xxhash BEFORE
     # the dedup/join shuffles — 8-byte keys instead of ~20-byte strings
     # through two exchanges; the equi-join result is unchanged (collision
     # odds ~|shingles|²/2⁶⁴).
-    if not use_kernel:
-        # small-corpus path: the r19 JVM expression chain — per-doc shingle
-        # DEDUP inside the row (array_distinct) before the explode; the
-        # coalesce() makes sz statically NON-NULLABLE so the downstream
-        # jac>=0.2 filter's inferred isnotnull(sz) constant-folds instead
-        # of inlining the whole alias chain at the scan (r9 findings).
-        toks = d.select(
-            "doc_id", "lang", F.split(F.lower("text"), " ").alias("ts")
-        ).filter(F.size("ts") >= 3)
-        sharr = toks.select(
-            "doc_id",
-            "lang",
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(0), F.size("ts") - 3),
-                    lambda i: F.xxhash64(
-                        F.concat_ws(
-                            " ",
-                            F.element_at("ts", i + 1),
-                            F.element_at("ts", i + 2),
-                            F.element_at("ts", i + 3),
-                        )
-                    ),
-                )
-            ).alias("sh"),
-        )
-        return explode_once(
-            sharr,
-            ["doc_id", "lang", F.coalesce(F.size("sh"), F.lit(0)).alias("sz")],
-            F.col("sh"),
-            "shingle",
-        )
     #
     # ONE fused mapInArrow kernel (r20) replaces the interpreted Catalyst
     # shingle chain (split → sequence/transform with per-element
@@ -437,8 +391,7 @@ def _jaccard_pairs(
     the pool's defaultParallelism; see the width comment below).
     """
     d = Catalog(spark, sf_dir).documents
-    n_docs = row_count(sf_dir, "documents") or 0
-    tri = trigram_shingle_rows(d, use_kernel=n_docs >= _TRI_KERNEL_MIN_DOCS)
+    tri = trigram_shingle_rows(d)
     # SHUFFLE_HASH on the inverted-index self-join: the join key (shingle
     # hash) is high-cardinality, so sort-merge wastes two sorts and
     # broadcast is impossible at corpus scale — a shuffled hash join is

@@ -121,7 +121,7 @@ def q33_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines)."""
     o = Catalog(spark, sf_dir).orders
     # _micros: codegen-arithmetic rounding — Round's per-value BigDecimal
-    # was the dominant scan-side constant (scripts/profile_q22.py, r10)
+    # was the dominant scan-side constant (SCALE.md r10 evidence round-up)
     mic_price = _micros("o_totalprice")
     running = (
         Window.partitionBy("_srp", "o_custkey")

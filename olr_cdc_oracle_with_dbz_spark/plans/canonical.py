@@ -65,7 +65,7 @@ def _micros(col: Column | str) -> Column:
     Rounding is spelled as primitive codegen arithmetic, not ``F.round``:
     Spark's Round on a double allocates ``BigDecimal.valueOf(y).setScale``
     PER VALUE, which profiled as the single largest constant in every
-    lineitem-scan aggregate (scripts/profile_q22.py, sf3: the 7-sum q22
+    lineitem-scan aggregate (SCALE.md r10 evidence round-up, sf3: the 7-sum q22
     aggregate was 2.4 s with Round vs 0.45 s with this form — worse than
     the 1.1 s single-threaded figure under 32 threads, i.e. allocation
     churn anti-scales). The replacement is EXACT half-away-from-zero for

@@ -837,8 +837,9 @@ class ParquetUpsertTable:
         ``vacuum(keep=1)`` retained only the zombie, the readable head
         record was deleted, ``referenced`` collapsed to {} and the GC
         loop dropped EVERY data dir: total table loss. Now the readable
-        head (``_head()``) and everything at/above its sequence are
-        unconditionally retained, whatever ``keep`` says.
+        head (the newest readable record of this vacuum's listing) and
+        everything at/above its sequence are unconditionally retained,
+        whatever ``keep`` says.
 
         Torn records BELOW the head are skipped, not deleted: under the
         fence protocol head > s implies record s was readable when the
@@ -872,7 +873,10 @@ class ParquetUpsertTable:
         seqs = self._commit_seqs()
         if not seqs:
             return []  # empty table: nothing to vacuum
-        head_seq, _head_m = self._head()
+        # the readable head, from this listing (_head() would LIST again)
+        head_seq = next(
+            (s for s in reversed(seqs) if self._record(s) is not None), 0
+        )
         retained = set(seqs[-keep:]) if keep > 0 else set(seqs[-1:])
         grace_cutoff = time.time() - self.vacuum_grace_sec
         to_drop: list[tuple[int, dict]] = []

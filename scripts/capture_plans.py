@@ -5,11 +5,12 @@ Usage:
     python scripts/capture_plans.py <suffix> [name ...]
 
 Writes plans/<round>/<query>_<suffix>.txt (round via PLANS_ROUND_DIR, default r20) for each named query (default: every
-bench-timed query). The session uses the SAME confs as bench.py (hostcal
-thread pool, AQE off, 8 shuffle partitions) so the captured plan is the one
-the bench executes. Queries whose construction runs Spark jobs (l4c Lloyd,
-l2e propagation, q03/q04 write round-trips) execute those jobs here too —
-the captured text is the final query's plan, as in the bench.
+bench-timed query). The session is bench.py's own (``bench_session``:
+hostcal thread pool, AQE off, 8 shuffle partitions, layout mirror, catalog
+pre-touch, co-bucketed facts) so the captured plan is the one the bench
+executes. Queries whose construction runs Spark jobs (l4c Lloyd, l2e
+propagation, q03/q04 write round-trips) execute those jobs here too — the
+captured text is the final query's plan, as in the bench.
 """
 
 from __future__ import annotations
@@ -29,36 +30,10 @@ def main() -> None:
     out_dir = os.path.join(repo, "plans", ROUND_DIR)
     os.makedirs(out_dir, exist_ok=True)
 
-    from olr_cdc_oracle_with_dbz_spark.hostcal import apply_calibration
+    from bench import bench_session
     from olr_cdc_oracle_with_dbz_spark.registry import load_all
-    from olr_cdc_oracle_with_dbz_spark.session import get_spark
 
-    apply_calibration()
-    spark = get_spark(
-        "olr-cdc-plan-capture",
-        **{
-            "spark.ui.showConsoleProgress": "false",
-            "spark.sql.adaptive.enabled": "false",
-            "spark.sql.shuffle.partitions": "8",
-            "spark.ui.enabled": "false",
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # same pre-touch as bench.py so schema-inference jobs don't run inside
-    # query construction
-    from olr_cdc_oracle_with_dbz_spark.catalog import TABLES, Catalog
-    from olr_cdc_oracle_with_dbz_spark.sources.layout import optimize_dir
-
-    optimize_dir(sf_dir)
-    os.environ["SPARK_GRAFT_LAYOUT_CACHE"] = "1"
-    cat = Catalog(spark, sf_dir)
-    for t in TABLES:
-        cat.table(t)
-    from olr_cdc_oracle_with_dbz_spark.operators.storage import ensure_cobucketed_facts
-
-    ensure_cobucketed_facts(spark, sf_dir)
-
+    spark = bench_session(sf_dir)[0]
     registry = load_all()
     names = [n for n, s in sorted(registry.items()) if s.bench]
     if only:

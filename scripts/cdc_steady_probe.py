@@ -28,90 +28,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def _phase_decompose(spark, work: str, unw, tail, n_tail: int) -> dict:
-    """r8 verdict item 4: split the steady tail merge into its phases.
-
-    Mirrors materialize.ParquetUpsertTable.merge_batch's dataflow with
-    the same functions, measuring cumulative cuts (best of 2 each):
-      tail_scan      parse+hash of the tail batch only (noop sink)
-      touched        the bounded distinct-bucket collect
-      readback_scan  tail + touched-bucket read-back union (noop)
-      compact        + bucket-aligned exchange and latest-per-key compact
-                     (noop — everything but the parquet encode)
-      full           the real merge_batch (parquet write + commit)
-    write ≈ full - compact; phases are cumulative, not additive.
-    """
-    import shutil
-    import time
-
-    from pyspark.sql import functions as F
-
-    from olr_cdc_oracle_with_dbz_spark.cdc.envelope import compact_latest_clustered
-    from olr_cdc_oracle_with_dbz_spark.streaming.materialize import (
-        _PB,
-        ParquetUpsertTable,
-    )
-
-    seed = f"{work}/seed"
-    table = ParquetUpsertTable(spark, seed, key="id")
-
-    def best2(fn) -> float:
-        vals = []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            fn()
-            vals.append(time.perf_counter() - t0)
-        return round(min(vals), 3)
-
-    batch = tail.withColumn(_PB, F.pmod(F.xxhash64(F.col("id")), F.lit(16)))
-    out = {}
-    out["tail_scan_sec"] = best2(
-        lambda: batch.write.format("noop").mode("overwrite").save()
-    )
-    out["touched_collect_sec"] = best2(
-        lambda: batch.select(_PB).distinct().collect()
-    )
-    manifest = table._manifest()
-    touched = sorted(r[0] for r in batch.select(_PB).distinct().collect())
-    vdir = None
-    by_version = {}
-    for b in touched:
-        rel = manifest["buckets"].get(str(b))
-        if rel is not None:
-            by_version.setdefault(rel.rsplit(f"/{_PB}=", 1)[0], []).append(b)
-    bases = []
-    for version, bs in by_version.items():
-        vdir = os.path.join(seed, version)
-        bases.append(
-            spark.read.option("basePath", vdir)
-            .parquet(*[os.path.join(vdir, f"{_PB}={b}") for b in bs])
-            .withColumn(_PB, F.col(_PB).cast("bigint"))
-        )
-    src = bases[0]
-    for extra in bases[1:]:
-        src = src.unionByName(extra, allowMissingColumns=True)
-    src = src.unionByName(batch, allowMissingColumns=True)
-    out["readback_scan_sec"] = best2(
-        lambda: src.write.format("noop").mode("overwrite").save()
-    )
-    compacted = compact_latest_clustered(src, "id", F.col(_PB), len(touched))
-    out["compact_sec"] = best2(
-        lambda: compacted.write.format("noop").mode("overwrite").save()
-    )
-
-    def full():
-        tgt = f"{work}/decomp"
-        shutil.rmtree(tgt, ignore_errors=True)
-        shutil.copytree(seed, tgt)
-        t0 = time.perf_counter()
-        ParquetUpsertTable(spark, tgt, key="id").merge_batch(tail, 1)
-        return time.perf_counter() - t0
-
-    out["full_merge_sec"] = round(min(full(), full()), 3)
-    out["full_merge_events_per_sec"] = round(n_tail / out["full_merge_sec"], 1)
-    return out
-
-
 def _spool_compare(spark, work: str, seed: str, tail, n_tail: int) -> dict:
     """r10 verdict item 4: the min_batch_events spool, measured end-to-end.
 
@@ -280,7 +196,6 @@ def _probe_one(spark, sf_dir: str) -> dict:
             method="seed merge untimed; tail merge timed; best of 2; "
             "bulk figure is the empty-table upper bound",
         )
-        out["phases"] = _phase_decompose(spark, work, unw, tail, n_tail)
         out["spool"] = _spool_compare(spark, work, seed, tail, n_tail)
     finally:
         shutil.rmtree(work, ignore_errors=True)

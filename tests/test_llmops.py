@@ -547,15 +547,14 @@ def test_trigram_kernel_matches_jvm_shingle_chain(spark):
         .reset_index(drop=True)
         .astype({"sz": "int64"})
     )
-    for use_kernel in (True, False):
-        new = (
-            trigram_shingle_rows(both, use_kernel=use_kernel)
-            .toPandas()
-            .sort_values(["doc_id", "shingle"])
-            .reset_index(drop=True)
-            .astype({"sz": "int64"})
-        )
-        assert old.equals(new), f"use_kernel={use_kernel} diverged"
+    new = (
+        trigram_shingle_rows(both)
+        .toPandas()
+        .sort_values(["doc_id", "shingle"])
+        .reset_index(drop=True)
+        .astype({"sz": "int64"})
+    )
+    assert old.equals(new)
 
 
 def test_fixedlist_matrix_non_list_layouts_match_vstack():

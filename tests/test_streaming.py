@@ -9,6 +9,7 @@ streaming upsert sink converges to the batch compaction result (S7 ≡ Q52).
 from __future__ import annotations
 
 import os
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -16,6 +17,7 @@ from pyspark.sql import functions as F
 from olr_cdc_oracle_with_dbz_spark.catalog import normalize_event_ts
 from olr_cdc_oracle_with_dbz_spark.cdc import envelope as E
 from olr_cdc_oracle_with_dbz_spark.cdc.fixtures import EXPECTED_FINAL, json_lines
+from olr_cdc_oracle_with_dbz_spark.fs import LocalFS
 from olr_cdc_oracle_with_dbz_spark.streaming.ingest import read_cdc_stream
 from olr_cdc_oracle_with_dbz_spark.streaming.materialize import (
     ParquetUpsertTable,
@@ -1106,37 +1108,36 @@ def test_replay_of_durable_batch_runs_no_job_at_and_below_head(spark, tmp_path):
     assert sorted(r["id"] for r in t.read().collect()) == list(range(8))
 
 
+class _CountingFS(LocalFS):
+    """LocalFS that counts the commit-log metadata calls."""
+
+    def __init__(self):
+        super().__init__()
+        self.calls = Counter()
+
+    def list_names(self, path):
+        self.calls["list_names"] += 1
+        return super().list_names(path)
+
+    def read_text(self, path):
+        self.calls["read_text"] += 1
+        return super().read_text(path)
+
+    def exists(self, path):
+        self.calls["exists"] += 1
+        return super().exists(path)
+
+    def create_exclusive(self, path, text):
+        self.calls["create_exclusive"] += 1
+        return super().create_exclusive(path, text)
+
+
 def test_healthy_merge_metadata_calls_pinned(spark, tmp_path):
     """A new-label merge into a populated table makes a fixed set of
     commit-log calls: a listing and a record read for the head, an exists
     probe of the version dir, a floor listing before and after the
     put-if-absent create, and that one create."""
-    from collections import Counter
-
-    from olr_cdc_oracle_with_dbz_spark.fs import LocalFS
-
-    class CountingFS(LocalFS):
-        def __init__(self):
-            super().__init__()
-            self.calls = Counter()
-
-        def list_names(self, path):
-            self.calls["list_names"] += 1
-            return super().list_names(path)
-
-        def read_text(self, path):
-            self.calls["read_text"] += 1
-            return super().read_text(path)
-
-        def exists(self, path):
-            self.calls["exists"] += 1
-            return super().exists(path)
-
-        def create_exclusive(self, path, text):
-            self.calls["create_exclusive"] += 1
-            return super().create_exclusive(path, text)
-
-    fs = CountingFS()
+    fs = _CountingFS()
     t = ParquetUpsertTable(spark, str(tmp_path / "tbl"), key="id", fs=fs)
     t.merge_batch(_mk_rows(spark, [(i, f"n{i}", 100 + i, False) for i in range(50)]), 1)
     upd = _mk_rows(spark, [(i, "u", 500 + i, False) for i in range(0, 50, 5)])
@@ -1146,6 +1147,28 @@ def test_healthy_merge_metadata_calls_pinned(spark, tmp_path):
         list_names=3, read_text=1, exists=1, create_exclusive=1
     )
     assert t.read().count() == 50
+
+
+def test_vacuum_takes_head_from_its_own_listing(spark, tmp_path):
+    """vacuum(keep=2) on an 8-record log lists the log dir once for the
+    records and the head, once for the floor markers and once for the
+    post-deletion referenced-dirs pass, and reads each record it needs
+    once (the head twice: before and after the deletions). It drops the
+    six oldest labels and the version dirs only they referenced."""
+    tdir = str(tmp_path / "tbl")
+    fs = _CountingFS()
+    t = ParquetUpsertTable(
+        spark, tdir, key="id", n_buckets=1, fs=fs, vacuum_grace_sec=0.0
+    )
+    for b in range(1, 9):
+        t.merge_batch(_mk_rows(spark, [(b, f"n{b}", 100 + b, False)]), b)
+    labels = t.versions()
+    assert len(labels) == 8
+    fs.calls.clear()
+    assert t.vacuum(keep=2) == labels[:6]
+    assert fs.calls == Counter(list_names=3, read_text=9, create_exclusive=1)
+    assert sorted(n for n in os.listdir(tdir) if n in labels) == labels[6:]
+    assert t.read().count() == 8
 
 
 def test_commit_record_schema_follows_additive_evolution(spark, tmp_path):
